@@ -291,6 +291,9 @@ def edge_betweenness_sampled(
                 F.greatest("je.src", "je.dst").alias("hi"),
                 total.alias("c"),
             )
+            # the state joins give EVERY edge a row; only shortest-path
+            # DAG edges (strictly positive dependency) are candidates
+            .where(F.col("c") > 0)
         )
         out = (
             per_dir.groupBy("lo", "hi")

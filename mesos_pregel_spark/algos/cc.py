@@ -26,6 +26,11 @@ an exponential round reduction (measured in
 tests/test_cc_jump.py::test_chain_round_counts: 1000-vertex chain,
 12 rounds vs the 999 hash-min would need).  Labels are component
 MINIMA in both kernels, so results are interchangeable.
+
+Both kernels are VertexPrograms run by the same superstep loop and
+share the symmetrising prep, the ``comp`` message, the min combiner,
+the seed state and the neighbor-min step; the jump kernel differs only
+in its ``apply``, which adds the self-join.
 """
 
 from __future__ import annotations
@@ -36,6 +41,52 @@ from pyspark.sql import functions as F
 from mesos_pregel_spark.functions.edges import symmetrize
 from mesos_pregel_spark.plans.pregel import PregelRun
 from mesos_pregel_spark.plans.program import VertexProgram, pregel
+
+
+def _seed_labels(e: DataFrame) -> DataFrame:
+    """comp_v = id_v, every vertex active.  Edges are symmetrized, so
+    the src set is every non-isolated vertex."""
+    return e.select(F.col("src").alias("id")).distinct().select(
+        "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
+    )
+
+
+def _neighbor_min(state: DataFrame, combined: DataFrame) -> DataFrame:
+    """(id, comp, comp_old): each label lowered to the smallest label
+    received this superstep."""
+    return (
+        state.join(combined, state["id"] == combined["dst"], "left_outer")
+        .select(
+            state["id"],
+            F.least(state["comp"], F.coalesce(combined["msg_min"], state["comp"]))
+            .alias("comp"),
+            state["comp"].alias("comp_old"),
+        )
+    )
+
+
+def _cc_program(name: str, init, apply) -> VertexProgram:
+    """The min-label VertexProgram both CC kernels run: symmetrized
+    edges, ``comp`` messages from changed vertices, min combiner, halt
+    when nothing changed."""
+    return VertexProgram(
+        name=name,
+        init=init,
+        prep_edges=lambda e: symmetrize(e.select("src", "dst", "weight"))
+        .select("src", "dst"),
+        edge_cols=("src", "dst"),
+        msg_cols=[F.col("comp").alias("msg")],
+        active_filter=F.col("changed"),
+        combiner={"msg_min": ("msg", "min")},
+        apply=apply,
+        aggregators=[
+            F.sum(F.col("changed").cast("long")).alias("active"),
+            F.count(F.lit(1)).alias("n_vertices"),
+        ],
+        halt=lambda aggs: aggs["active"] == 0,
+        frontier_agg="active",
+        finalize=lambda s: s.select("id", F.col("comp").alias("component")),
+    )
 
 
 def connected_components(
@@ -70,12 +121,10 @@ def connected_components(
     """
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
+        if prev_labels is None:
+            return _seed_labels(e)
         # symmetrized: src set == dst set == all non-isolated vertices
         vertices = e.select(F.col("src").alias("id")).distinct()
-        if prev_labels is None:
-            return vertices.select(
-                "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
-            )
         prev = prev_labels.select(
             "id", F.col("component").alias("warm_comp")
         )
@@ -102,38 +151,12 @@ def connected_components(
         )
 
     def apply(state: DataFrame, combined: DataFrame, ctx: dict) -> DataFrame:
-        return (
-            state.join(combined, state["id"] == combined["dst"], "left_outer")
-            .select(
-                state["id"],
-                F.least(state["comp"], F.coalesce(combined["msg_min"], state["comp"]))
-                .alias("comp"),
-                (
-                    F.coalesce(combined["msg_min"], state["comp"]) < state["comp"]
-                ).alias("changed"),
-            )
+        return _neighbor_min(state, combined).select(
+            "id", "comp", (F.col("comp") < F.col("comp_old")).alias("changed")
         )
 
-    program = VertexProgram(
-        name="cc",
-        init=init,
-        prep_edges=lambda e: symmetrize(e.select("src", "dst", "weight"))
-        .select("src", "dst"),
-        edge_cols=("src", "dst"),
-        msg_cols=[F.col("comp").alias("msg")],
-        active_filter=F.col("changed"),
-        combiner={"msg_min": ("msg", "min")},
-        apply=apply,
-        aggregators=[
-            F.sum(F.col("changed").cast("long")).alias("active"),
-            F.count(F.lit(1)).alias("n_vertices"),
-        ],
-        halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
-        finalize=lambda s: s.select("id", F.col("comp").alias("component")),
-    )
     return pregel(
-        spark, edges, program,
+        spark, edges, _cc_program("cc", init, apply),
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
@@ -147,76 +170,38 @@ def connected_components_jump(
     edges: DataFrame,
     max_rounds: int = 60,
     edge_partitions: int | None = None,
-) -> tuple[DataFrame, "PregelRun"]:
+) -> tuple[DataFrame, PregelRun]:
     """CC with pointer jumping (see module docstring): per round, the
     neighbor-min step then ``comp ← comp[comp]``; O(log diameter)
     rounds.  Returns (components(id, component), run) — identical
     labels to ``connected_components``.
 
-    Plan shape per round: one scatter over the persisted symmetric
-    edge table + one min-combine (as hash-min), plus one self-join of
-    the label table on ``comp = id`` (the jump).  The label table is
-    |V| rows — the self-join shuffles vertex state only, never edges,
-    so the extra cost per round is small next to the edge scatter and
-    buys exponentially fewer rounds on long-diameter graphs.
+    Plan shape per round: the loop's scatter over the persisted
+    symmetric edge table + one min-combine (as hash-min), then the
+    ``apply`` self-joins the label table on ``comp = id`` (the jump).
+    The label table is |V| rows — the self-join shuffles vertex state
+    only, never edges, so the extra cost per round is small next to
+    the edge scatter and buys exponentially fewer rounds on
+    long-diameter graphs.
     """
-    from pyspark.storagelevel import StorageLevel
 
-    from mesos_pregel_spark.operators.combine import combine
-    from mesos_pregel_spark.operators.scatter import scatter
-
-    nparts = edge_partitions or spark.sparkContext.defaultParallelism
-    e = (
-        symmetrize(edges.select("src", "dst", "weight")).select("src", "dst")
-        .repartition(nparts, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-    run = PregelRun(spark, "cc_jump")
-    state = run.materialize(
-        e.select(F.col("src").alias("id")).distinct()
-        .select("id", F.col("id").alias("comp"), F.lit(True).alias("changed")),
-        durable=False,
-    )
-    while run.superstep < max_rounds:
-        msgs = scatter(
-            e, state, [F.col("comp").alias("msg"), F.col("src").alias("msrc")],
-            active_filter=F.col("changed"),
-        )
-        combined = combine(msgs, ["dst"], {"msg_min": ("msg", "min")})
-        s1 = (
-            state.join(combined, state["id"] == combined["dst"], "left_outer")
-            .select(
-                state["id"],
-                F.least(
-                    state["comp"],
-                    F.coalesce(combined["msg_min"], state["comp"]),
-                ).alias("comp1"),
-                state["comp"].alias("comp_old"),
-            )
-        )
-        # pointer jump: comp ← comp[comp].  comp1 is always a live
+    def apply(state: DataFrame, combined: DataFrame, ctx: dict) -> DataFrame:
+        # pointer jump: comp ← comp[comp].  comp is always a live
         # vertex id (labels are vertex ids), so the inner join is total.
+        s1 = _neighbor_min(state, combined)
         a, b = s1.alias("a"), s1.alias("b")
-        jumped = a.join(b, F.col("a.comp1") == F.col("b.id")).select(
+        return a.join(b, F.col("a.comp") == F.col("b.id")).select(
             F.col("a.id").alias("id"),
-            F.col("b.comp1").alias("comp"),
-            (F.col("b.comp1") != F.col("a.comp_old")).alias("changed"),
+            F.col("b.comp").alias("comp"),
+            (F.col("b.comp") != F.col("a.comp_old")).alias("changed"),
         )
-        state = run.materialize(jumped)
-        aggs = run.aggregators(
-            state,
-            [
-                F.sum(F.col("changed").cast("long")).alias("active"),
-                F.count(F.lit(1)).alias("n_vertices"),
-            ],
-        )
-        run.record(**aggs)
-        run.next_superstep()
-        if aggs["active"] == 0:
-            break
-    result = run.finish(state.select("id", F.col("comp").alias("component")))
-    e.unpersist()
-    return result, run
+
+    return pregel(
+        spark, edges,
+        _cc_program("cc_jump", lambda e, ctx: _seed_labels(e), apply),
+        max_supersteps=max_rounds,
+        edge_partitions=edge_partitions,
+    )
 
 
 def component_sizes(labels: DataFrame) -> DataFrame:

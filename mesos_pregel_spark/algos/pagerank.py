@@ -16,10 +16,7 @@ Expressed as a :class:`VertexProgram` on the generic superstep runner
 (plans/program.py): scatter join (edges pre-partitioned by src,
 persisted — only the small vertex state shuffles) → sum combiner (hash
 agg with automatic map-side partials; optional explicit salting for
-hub skew) → damping expression.  ``kernel='csr'`` swaps the gather for
-the Arrow/CSR broadcast kernel (operators/csr.py) via
-``custom_gather`` — correct when vertex state fits in a broadcast,
-which holds for actor graphs (vertex set = roles ∪ tools).
+hub skew) → damping expression.
 """
 
 from __future__ import annotations
@@ -64,9 +61,7 @@ def pagerank(
     n_salt: int = 0,
     salt_hot_k: int = 0,
     edge_partitions: int | None = None,
-    kernel: str = "join",
     broadcast_threshold: int | None = None,
-    adaptive: bool | None = None,
     weighted: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
     """Run PageRank to convergence.  Returns (ranks(id, pagerank), run).
@@ -84,70 +79,24 @@ def pagerank(
     with W_u = Σ of u's out-edge weights and parallel (src,dst) rows
     collapsed by weight-sum in prep — the transcript graphs carry
     interaction counts, and the weighted walk follows them.  Same
-    plan shape (the msg expression changes, nothing else); the CSR
-    kernel is unweighted-only."""
-    if weighted and kernel == "csr":
-        raise ValueError("kernel='csr' supports unweighted PageRank only")
-
-    program = pagerank_program(damping=damping, tol=tol, weighted=weighted)
-
-    packed: dict = {}  # CSR edge table, lazily packed once per run
-    if kernel == "csr":
-        from mesos_pregel_spark.operators.combine import combine
-        from mesos_pregel_spark.operators.scatter import scatter
-        from mesos_pregel_spark.operators.csr import (
-            CsrStateTooLarge,
-            csr_gather_sums,
-            pack_edges_by_dst,
-        )
-
-        def join_gather(e, state):
-            msgs = scatter(
-                e,
-                state,
-                [(F.col("pr") / F.col("outdeg")).alias("msg")],
-                active_filter=F.col("outdeg") > 0,
-            )
-            return combine(msgs, ["dst"], {"msg_sum": ("msg", "sum")})
-
-        def custom_gather(spark, e, state, ctx):
-            # Guard: CSR broadcasts the whole vertex state — fall back
-            # to the join kernel instead of OOMing the driver when the
-            # graph outgrows the broadcastable regime.
-            if ctx.get("csr_fallback"):
-                return join_gather(e, state)
-            try:
-                if "edges" not in packed:
-                    packed["edges"] = pack_edges_by_dst(e, ctx["nparts"])
-                return csr_gather_sums(
-                    spark, packed["edges"], state, n_vertices=ctx.get("n")
-                )
-            except CsrStateTooLarge:
-                ctx["csr_fallback"] = True
-                return join_gather(e, state)
-
-        program.custom_gather = custom_gather
-
-    result, run = pregel(
-        spark, edges, program,
+    plan shape (the msg expression changes, nothing else)."""
+    return pregel(
+        spark, edges,
+        pagerank_program(damping=damping, tol=tol, weighted=weighted),
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
         broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
-        adaptive=adaptive,
     )
-    if "edges" in packed:
-        packed["edges"].unpersist()
-    return result, run
 
 
 def pagerank_program(
     damping: float = 0.85, tol: float = 1e-6, weighted: bool = False
 ) -> VertexProgram:
-    """The PageRank :class:`VertexProgram` (join-kernel gather) — also
-    the prep contract for callers pre-preparing edges via
-    ``plans.program.prepare_edges`` + ``edge_partitions=0``."""
+    """The PageRank :class:`VertexProgram` — also the prep contract
+    for callers pre-preparing edges via ``plans.program.prepare_edges``
+    + ``edge_partitions=0``."""
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
         if weighted:

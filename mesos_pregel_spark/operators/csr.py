@@ -1,30 +1,22 @@
-"""S2 — CSR-packed Arrow kernels (BASELINE.json:6 "vectorized
+"""S2 — CSR-packed Arrow kernel (BASELINE.json:6 "vectorized
 Arrow/pandas UDFs over CSR-packed edge partitions").
 
-The gather (message sum per destination) has a join-free fast path
-when the *vertex state* is small relative to the edge table — exactly
-the transcript-graph regime: 10^12 turns collapse to an actor graph
-whose vertex set is |roles ∪ tools| while the edge weights carry the
-mass.  Per superstep:
+Triangle counting (A4) has a join-free fast path when the oriented
+edge list is small enough to broadcast: the driver packs it once into
+sorted numpy arrays — a CSR adjacency (per-vertex offsets into one
+neighbor array) plus a sorted uint64 edge-key index — and
+``mapInPandas`` streams the edge table in Arrow batches, answering
+every wedge's closing-edge test with one vectorized binary search per
+batch (see :func:`csr_triangle_counts`).  No per-row Python, and no
+wedge shuffle.
 
-1. vertex contributions (pr/outdeg) are broadcast to every executor
-   as plain numpy arrays (sorted ids + values — a binary-searchable
-   CSR-style index);
-2. ``mapInPandas`` streams the (static, dst-partitioned, persisted)
-   edge table in Arrow batches and reduces contributions per dst with
-   ``np.unique``/``np.bincount`` — a per-partition CSR reduction, no
-   per-row Python;
-3. because edges are hash-partitioned by dst, the finishing
-   ``groupBy(dst)`` merges at most #batches partial rows per dst.
-
-This trades the scatter join's shuffle of the vertex side for a
-broadcast — the right physical plan when |V| ≪ |E|, and the driver
-chooses it explicitly (``kernel='csr'``) since Catalyst can't know the
-iteration-invariant structure.  The broadcast is GUARDED: state larger
-than ``max_broadcast_rows`` raises :class:`CsrStateTooLarge` instead
-of silently collecting the cluster's vertex state through the driver —
-callers fall back to the join kernel (algos/pagerank.py does so
-automatically).
+This trades the wedge join's shuffles for a broadcast — the right
+physical plan when the graph fits on one machine, and the caller
+chooses it explicitly (``triangle_count(..., kernel='csr')``) since
+Catalyst can't see that regime.  The broadcast is GUARDED: an edge
+list larger than ``max_broadcast_rows`` raises
+:class:`CsrStateTooLarge` instead of silently collecting the cluster's
+edges through the driver.
 """
 
 from __future__ import annotations
@@ -35,77 +27,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-# Vertex-state rows above which the CSR gather refuses to broadcast.
-# 5e7 rows × ~24 B/row ≈ 1.2 GB on the driver and per executor — the
-# sane ceiling for a broadcast; past it the join kernel wins anyway.
+# Rows above which a CSR kernel refuses to broadcast.  5e7 rows ×
+# ~24 B/row ≈ 1.2 GB on the driver and per executor — the sane ceiling
+# for a broadcast; past it the join kernel wins anyway.
 MAX_BROADCAST_ROWS = 50_000_000
 
 
 class CsrStateTooLarge(ValueError):
-    """Vertex state exceeds the broadcastable bound for a CSR kernel."""
-
-
-def pack_edges_by_dst(edges: DataFrame, nparts: int) -> DataFrame:
-    """Static edge table hash-partitioned by dst and persisted — packed
-    once, reused by every superstep's gather."""
-    packed = edges.select("src", "dst").repartition(nparts, "dst") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    packed.count()
-    return packed
-
-
-def csr_gather_sums(
-    spark: SparkSession,
-    packed_edges: DataFrame,
-    state: DataFrame,
-    n_vertices: int | None = None,
-    max_broadcast_rows: int | None = None,
-) -> DataFrame:
-    """PageRank gather: Σ_{u→v} pr_u/outdeg_u per v, via broadcast
-    contributions + Arrow-batched CSR reduction.  Returns (dst, msg_sum).
-
-    Raises :class:`CsrStateTooLarge` when the vertex state exceeds
-    ``max_broadcast_rows`` (pass ``n_vertices`` if the caller already
-    knows the count — avoids an extra job)."""
-    if max_broadcast_rows is None:
-        max_broadcast_rows = MAX_BROADCAST_ROWS
-    if n_vertices is None:
-        n_vertices = state.count()
-    if n_vertices > max_broadcast_rows:
-        raise CsrStateTooLarge(
-            f"vertex state has {n_vertices:,} rows > broadcastable bound "
-            f"{max_broadcast_rows:,}; use the join kernel (kernel='join')"
-        )
-    pdf = state.select("id", "outdeg", "pr").toPandas()
-    senders = pdf[pdf["outdeg"] > 0]
-    order = np.argsort(senders["id"].to_numpy())
-    ids = senders["id"].to_numpy()[order]
-    contrib = (senders["pr"].to_numpy() / senders["outdeg"].to_numpy())[order]
-    bc = spark.sparkContext.broadcast((ids, contrib))
-
-    def reduce_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, b_contrib = bc.value
-        for batch in batches:
-            src = batch["src"].to_numpy()
-            dst = batch["dst"].to_numpy()
-            idx = np.searchsorted(b_ids, src)
-            # Dangling sources never appear (outdeg>0 by construction),
-            # but guard against ids missing from state.
-            idx = np.clip(idx, 0, len(b_ids) - 1)
-            valid = b_ids[idx] == src
-            if not valid.all():
-                src, dst, idx = src[valid], dst[valid], idx[valid]
-            vals = b_contrib[idx]
-            # CSR-style reduction: unique dsts -> offsets -> segment sums.
-            u_dst, inverse = np.unique(dst, return_inverse=True)
-            sums = np.bincount(inverse, weights=vals, minlength=len(u_dst))
-            yield pd.DataFrame({"dst": u_dst, "msg_sum": sums})
-
-    partials = packed_edges.mapInPandas(reduce_batches, "dst long, msg_sum double")
-    # dst-partitioned input => this merge moves ~#batches rows per dst.
-    return partials.groupBy("dst").agg(F.sum("msg_sum").alias("msg_sum"))
+    """Input exceeds the broadcastable bound for a CSR kernel."""
 
 
 def csr_triangle_counts(

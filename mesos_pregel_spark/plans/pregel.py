@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.plans.checkpoint import CheckpointManager
-from mesos_pregel_spark.plans.truncate import truncate_plan
+from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
 
 
 class PregelRun:
@@ -146,16 +146,7 @@ class PregelRun:
         JVM GC + ContextCleaner — at hundreds of supersteps that is
         real executor storage memory."""
         for df in self._retired:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-            jrdd = getattr(df, "_ck_jrdd", None)
-            if jrdd is not None:
-                try:
-                    jrdd.unpersist(False)
-                except Exception:
-                    pass
+            release_plan(df)
         self._retired = []
 
     # ---- aggregators (P5) --------------------------------------------
@@ -187,19 +178,8 @@ class PregelRun:
         not leak for the rest of the Spark session."""
         self.reap()
         for attr in ("_live", "_edges_live"):
-            df = getattr(self, attr)
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-                jrdd = getattr(df, "_ck_jrdd", None)
-                if jrdd is not None:
-                    try:
-                        jrdd.unpersist(False)
-                    except Exception:
-                        pass
-                setattr(self, attr, None)
+            release_plan(getattr(self, attr))
+            setattr(self, attr, None)
 
     def finish(
         self, vertices: DataFrame, converged: bool = True, meta: dict | None = None

@@ -86,11 +86,6 @@ class VertexProgram:
     finalize: Callable[[DataFrame], DataFrame] | None = None
     # Rebuild ctx constants when resuming from a checkpoint.
     restore_ctx: Callable[[DataFrame, dict], None] | None = None
-    # Replace scatter+combine entirely (e.g. the CSR/Arrow gather):
-    # (spark, edges, state, ctx) -> combined messages.
-    custom_gather: (
-        Callable[[SparkSession, DataFrame, DataFrame, dict], DataFrame] | None
-    ) = None
     # Topology mutation [P §3.4]: called after each superstep's apply
     # with (edges, new state, ctx); returns the edge table for the NEXT
     # superstep (or None = unchanged).  Pregel exposes per-vertex
@@ -126,7 +121,6 @@ def pregel(
     salt_hot_k: int = 0,
     broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
-    adaptive: bool | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run ``program`` to its halt condition (or the superstep cap).
     Returns (result DataFrame, run bookkeeping).
@@ -167,8 +161,8 @@ def pregel(
     #   local shuffle readers pay for themselves — 9.5M edges/s
     #   AQE-off vs 33.7M AQE-on at 512M edges on this box.  → keep.
     #
-    # ``adaptive=None`` picks by edge count at AQE_EDGE_THRESHOLD
-    # (crossover measured between those two points; see BENCH notes).
+    # The loop picks by edge count at AQE_EDGE_THRESHOLD (crossover
+    # measured between those two points; see BENCH notes).
     # Skew remains handled by explicit salting (S1) in both regimes.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try:
@@ -178,7 +172,6 @@ def pregel(
             n_salt=n_salt, salt_hot_k=salt_hot_k,
             broadcast_threshold=broadcast_threshold,
             edge_partitions=edge_partitions,
-            adaptive=adaptive,
         )
     except BaseException:
         # raising halt/apply hooks (e.g. ColorMaskSaturated) abort the
@@ -210,7 +203,6 @@ def _pregel_loop(
     salt_hot_k: int,
     broadcast_threshold: int | None,
     edge_partitions: int | None,
-    adaptive: bool | None,
 ) -> tuple[DataFrame, PregelRun]:
 
     nparts = edge_partitions or spark.sparkContext.defaultParallelism
@@ -263,11 +255,12 @@ def _pregel_loop(
         n_edges = e.count()
         run._edges_live = e
 
-    if adaptive is None:
-        adaptive = n_edges > AQE_EDGE_THRESHOLD
-    spark.conf.set("spark.sql.adaptive.enabled", "true" if adaptive else "false")
+    spark.conf.set(
+        "spark.sql.adaptive.enabled",
+        "true" if n_edges > AQE_EDGE_THRESHOLD else "false",
+    )
 
-    ctx: dict = {"aggs": {}, "nparts": nparts, "n_edges": n_edges}
+    ctx: dict = {"aggs": {}, "n_edges": n_edges}
     if resumed is not None:
         state = resumed
         if program.restore_ctx is not None:
@@ -287,29 +280,26 @@ def _pregel_loop(
 
     converged = False
     while run.superstep < max_supersteps:
-        if program.custom_gather is not None:
-            combined = program.custom_gather(spark, e, state, ctx)
-        else:
-            frontier = (
-                ctx["aggs"].get(program.frontier_agg)
-                if program.frontier_agg else None
-            )
-            use_broadcast = (
-                broadcast_threshold is not None
-                and frontier is not None
-                and frontier <= broadcast_threshold
-            )
-            msgs = scatter(
-                e,
-                state,
-                [*program.msg_cols, F.col("src").alias("msrc")],
-                active_filter=program.active_filter,
-                broadcast=use_broadcast,
-            )
-            combined = combine(
-                msgs, list(program.combine_keys), program.combiner,
-                n_salt=n_salt, salt_on="msrc", hot_keys=hot,
-            )
+        frontier = (
+            ctx["aggs"].get(program.frontier_agg)
+            if program.frontier_agg else None
+        )
+        use_broadcast = (
+            broadcast_threshold is not None
+            and frontier is not None
+            and frontier <= broadcast_threshold
+        )
+        msgs = scatter(
+            e,
+            state,
+            [*program.msg_cols, F.col("src").alias("msrc")],
+            active_filter=program.active_filter,
+            broadcast=use_broadcast,
+        )
+        combined = combine(
+            msgs, list(program.combine_keys), program.combiner,
+            n_salt=n_salt, salt_on="msrc", hot_keys=hot,
+        )
         if program.post_combine is not None:
             combined = program.post_combine(combined)
 

@@ -3796,7 +3796,10 @@ def q_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lo", "hi", "emb",
                 F.coalesce("disp", F.lit(0)).cast("long").alias("disp"))
     )
-    res = out.orderBy(F.desc("disp"), "lo", "hi").limit(100)
+    # materialize BEFORE dropping tri: a lazy res would recompute the
+    # triangle pipeline once per branch at collect time
+    res = out.orderBy(F.desc("disp"), "lo", "hi").limit(100) \
+        .localCheckpoint(eager=True)
     tri.unpersist()
     return res
 

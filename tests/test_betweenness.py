@@ -169,6 +169,21 @@ def test_edge_betweenness_matches_python(spark):
             (k_, got.get(k_), exp.get(k_))
 
 
+def test_edge_betweenness_emits_only_dag_edges(spark):
+    """Fewer shortest-path-DAG edges than top_k: the output holds the
+    DAG edges only, never zero-ebc rows for the rest.  From the single
+    pivot a of triangle abc, b and c sit at the same depth, so edge
+    bc lies on no shortest path."""
+    from mesos_pregel_spark.algos.betweenness import edge_betweenness_sampled
+
+    got_df, _run = edge_betweenness_sampled(
+        spark, _df(spark, [("a", "b"), ("b", "c"), ("a", "c")]),
+        max_depth=10, edge_partitions=2, pivots=["a"], top_k=10,
+    )
+    got = {(r["lo"], r["hi"]): r["ebc"] for r in got_df.collect()}
+    assert got == {("a", "b"): 1.0, ("a", "c"): 1.0}
+
+
 def test_edge_betweenness_bridge_dominates(spark):
     """Barbell: two triangles joined by one bridge — with all vertices
     as pivots the bridge is the unique max-ebc edge (the Girvan-Newman

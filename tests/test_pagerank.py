@@ -3,7 +3,6 @@
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import id_space
 from tests.oracle_pregel import oracle_pagerank
@@ -58,47 +57,6 @@ def test_partition_invariance(spark):
                      edge_partitions=16)
 
 
-def test_csr_kernel_matches(spark):
-    t = generate_transcripts(spark, n_conv=150, seed=42)
-    ids_df = edges_with_ids(build_edges(t))
-    edges = [(r["src"], r["dst"], r["weight"]) for r in ids_df.collect()]
-    _run_and_compare(spark, ids_df, edges, tol=0.0, max_supersteps=8,
-                     kernel="csr")
-
-
-def test_csr_gather_guard_raises(spark):
-    """csr_gather_sums refuses to broadcast vertex state beyond the
-    bound instead of silently toPandas()-ing the cluster's state."""
-    import pytest
-
-    from mesos_pregel_spark.operators.csr import (
-        CsrStateTooLarge,
-        csr_gather_sums,
-        pack_edges_by_dst,
-    )
-
-    ids_df, _, _ = id_space(spark, micro_graph_df(spark, "k4"))
-    packed = pack_edges_by_dst(ids_df, 2)
-    state = (
-        ids_df.select(F.col("src").alias("id")).distinct()
-        .select("id", F.lit(3).alias("outdeg"), F.lit(0.25).alias("pr"))
-    )
-    with pytest.raises(CsrStateTooLarge):
-        csr_gather_sums(spark, packed, state, max_broadcast_rows=2)
-    packed.unpersist()
-
-
-def test_csr_kernel_falls_back_when_state_too_large(spark, monkeypatch):
-    """pagerank(kernel='csr') silently switches to the join gather when
-    the state exceeds the broadcastable bound — same converged result."""
-    import mesos_pregel_spark.operators.csr as csr_mod
-
-    monkeypatch.setattr(csr_mod, "MAX_BROADCAST_ROWS", 2)
-    ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "k4"))
-    _run_and_compare(spark, ids_df, edges, tol=0.0, max_supersteps=6,
-                     kernel="csr")
-
-
 def test_hot_key_salting_equivalence(spark):
     """S1 hot-list: salting only the top-k hub destinations produces
     identical results to unsalted / fully-salted combines."""
@@ -137,11 +95,3 @@ def test_weighted_equals_unweighted_on_uniform_weights(spark):
     for v in wm:
         assert abs(wm[v] - um[v]) < 1e-12
 
-
-def test_weighted_csr_rejected(spark):
-    import pytest as _pytest
-
-    t = generate_transcripts(spark, n_conv=50, seed=7)
-    ids_df = edges_with_ids(build_edges(t))
-    with _pytest.raises(ValueError, match="unweighted"):
-        pagerank(spark, ids_df, weighted=True, kernel="csr")

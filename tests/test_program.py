@@ -11,11 +11,16 @@ ctx["aggs"] visibility rule (aggregators readable by apply() the next
 superstep [P §3.3]).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import id_space
 
-from mesos_pregel_spark.algos.cc import connected_components
+from mesos_pregel_spark.algos.cc import (
+    connected_components,
+    connected_components_jump,
+)
+from mesos_pregel_spark.algos.pagerank import pagerank
 from mesos_pregel_spark.fixtures import micro_graph_df
 from mesos_pregel_spark.functions.edges import symmetrize
 from mesos_pregel_spark.plans.program import VertexProgram, pregel
@@ -130,8 +135,6 @@ def test_prepartitioned_handover_validates_columns(spark):
     """edge_partitions=0 skips semantic prep (symmetrize/collapse), so
     a handover missing the program's edge columns must fail loudly
     instead of silently computing on the wrong graph."""
-    import pytest
-
     ids_df, _edges, _names = id_space(spark, micro_graph_df(spark, "chain4"))
     bad = ids_df.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     with pytest.raises(ValueError, match="prepare_edges"):
@@ -153,3 +156,24 @@ def test_prepare_edges_feeds_the_fast_path(spark):
     prepped.unpersist()
     assert {tuple(r) for r in normal.collect()} == \
            {tuple(r) for r in fast.collect()}
+
+
+_BUILT_INS = {
+    "pagerank": lambda spark, e: pagerank(spark, e),
+    "pagerank_weighted": lambda spark, e: pagerank(spark, e, weighted=True),
+    "cc": lambda spark, e: connected_components(spark, e),
+    "cc_jump": lambda spark, e: connected_components_jump(spark, e),
+}
+
+
+@pytest.mark.parametrize("algo", sorted(_BUILT_INS))
+def test_success_path_releases_caches(spark, algo):
+    """A converged run drops its edge cache and every superseded
+    superstep state: once the result is collected, only the result's
+    own checkpoint is still persisted."""
+    ids_df, _edges, _names = id_space(spark, micro_graph_df(spark, "two_islands"))
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    result, _run = _BUILT_INS[algo](spark, ids_df)
+    result.collect()
+    assert jsc.getPersistentRDDs().size() <= before + 1

@@ -73,3 +73,22 @@ def test_csr_kernel_transcript_graph(spark):
     pv, total = triangle_count(spark, ids_df, kernel="csr")
     assert total == exp_total
     assert {r["id"]: r["triangles"] for r in pv.collect()} == exp_counts
+
+
+def test_csr_triangle_guard_raises(spark):
+    """csr_triangle_counts refuses to broadcast an oriented edge list
+    beyond the bound instead of toPandas()-ing the cluster's edges."""
+    from pyspark.sql import functions as F
+
+    from mesos_pregel_spark.algos.triangles import canonical_undirected
+    from mesos_pregel_spark.operators.csr import (
+        CsrStateTooLarge,
+        csr_triangle_counts,
+    )
+
+    ids_df, _, _ = id_space(spark, micro_graph_df(spark, "k4"))
+    oriented = canonical_undirected(ids_df).select(
+        F.col("lo").alias("u"), F.col("hi").alias("v")
+    )
+    with pytest.raises(CsrStateTooLarge):
+        csr_triangle_counts(spark, oriented, max_broadcast_rows=2)
