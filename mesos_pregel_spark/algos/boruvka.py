@@ -56,6 +56,9 @@ UDFs, no window over an unbounded partition.  Lifecycle follows
 algos/scc.py: every carried frame is truncate_plan-materialized
 (stats-compounding-proof) and superseded frames are released as soon
 as their successor exists.
+
+Not a plans/program.py VertexProgram: each round contracts edges over
+a shrinking working edge set and sends no vertex messages.
 """
 
 from __future__ import annotations

@@ -18,12 +18,14 @@ Pinned semantics (mirrored by the recursive-CTE DuckDB twin):
   never contributes to itself (its bit is set at depth 0).
 - contributions stop at depth ``max_depth`` (both engines).
 
-Execution shape (design-for-100×): ONE 64-bit mask column carries all
-k frontiers — per superstep one frontier-filtered scatter of the FRESH
+Execution shape (design-for-100×): a VertexProgram run by
+plans/program.py::pregel.  ONE 64-bit mask column carries all k
+frontiers — per superstep one frontier-filtered scatter of the FRESH
 bits only (a vertex re-sends nothing once its bits stop growing), one
 bit_or combine with map-side partials, and the accumulator update is
-two integer columns.  k pivots cost one edge pass per BFS level, not
-k, and state is O(1) per vertex regardless of k <= 63.
+two integer columns; superstep s is BFS depth s + 1 (``ctx["superstep"]``).
+k pivots cost one edge pass per BFS level, not k, and state is O(1)
+per vertex regardless of k <= 63.
 """
 
 from __future__ import annotations
@@ -32,16 +34,25 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.functions.edges import symmetrize
-from mesos_pregel_spark.operators.combine import combine
-from mesos_pregel_spark.operators.scatter import scatter
 from mesos_pregel_spark.plans.pregel import PregelRun
+from mesos_pregel_spark.plans.program import VertexProgram, pregel
 
 # 12-digit fixed point: HC_SCALE div t is exact per term; <= 63 pivots
 # keep the per-vertex sum below 63e12, far inside int64.
 HC_SCALE = 10**12
+
+
+def md5_min_pivots(e: DataFrame, n_pivots: int) -> list:
+    """The ``n_pivots`` vertices of the prepared (symmetrized) edge
+    table minimizing (md5(string(id)), id) — one driver collect."""
+    return [
+        r["id"]
+        for r in e.select(F.col("src").alias("id")).distinct()
+        .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
+        .limit(n_pivots).collect()
+    ]
 
 
 def harmonic_sampled(
@@ -64,61 +75,32 @@ def harmonic_sampled(
     run — one BFS, three centralities."""
     if not 0 < n_pivots <= 63:
         raise ValueError(f"need 1..63 pivots, got {n_pivots}")
-    nparts = edge_partitions or spark.sparkContext.defaultParallelism
-    e = (
-        symmetrize(edges.select("src", "dst", "weight")).select("src", "dst")
-        .repartition(nparts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e.count()
-    verts = e.select(F.col("src").alias("id")).distinct()
-    if pivots is None:
-        pivots = [
-            r["id"]
-            for r in verts.orderBy(
-                F.md5(F.col("id").cast("string")), F.col("id")
-            ).limit(n_pivots).collect()
-        ]
-    pivots = sorted(pivots)
-    run = PregelRun(
-        spark, "harmonic",
-        params={"pivots": [str(p) for p in pivots], "max_depth": max_depth},
-    )
-    run._edges_live = e
 
-    try:
-        init_mask = F.lit(0).cast("long")
-        for i, p in enumerate(pivots):
-            init_mask = init_mask.bitwiseOR(
+    def init(e: DataFrame, ctx: dict) -> DataFrame:
+        piv = sorted(pivots if pivots is not None
+                     else md5_min_pivots(e, n_pivots))
+        mask = F.lit(0).cast("long")
+        for i, p in enumerate(piv):
+            mask = mask.bitwiseOR(
                 F.when(F.col("id") == F.lit(p), F.lit(1 << i))
                 .otherwise(F.lit(0)).cast("long")
             )
-        state = run.materialize(
-            verts.select(
-                "id",
-                init_mask.alias("mask"),
-                init_mask.alias("fresh"),
-                F.lit(0).cast("long").alias("hnum"),
-                F.lit(0).cast("long").alias("dsum"),
-                F.lit(0).cast("long").alias("n_reached"),
-                F.lit(0).cast("long").alias("ecc_lb"),
-            ),
-            durable=False,
+        return e.select(F.col("src").alias("id")).distinct().select(
+            "id",
+            mask.alias("mask"),
+            mask.alias("fresh"),
+            *[F.lit(0).cast("long").alias(c)
+              for c in ("hnum", "dsum", "n_reached", "ecc_lb")],
         )
-        for t in range(1, max_depth + 1):
-            msgs = scatter(
-                e, state,
-                [F.col("fresh").alias("m")],
-                active_filter=F.col("fresh") != 0,
-            )
-            combined = combine(msgs, ["dst"], {"inbox": ("m", "bit_or")})
-            joined = state.join(
-                combined, state["id"] == combined["dst"], "left_outer"
-            )
-            inbox = F.coalesce(combined["inbox"], F.lit(0)).cast("long")
-            new_bits = inbox.bitwiseAND(F.bitwise_not(state["mask"]))
-            nb = F.bit_count(new_bits).cast("long")
-            state = run.materialize(joined.select(
+
+    def apply(state: DataFrame, combined: DataFrame, ctx: dict) -> DataFrame:
+        t = ctx["superstep"] + 1  # BFS depth of the bits landing now
+        inbox = F.coalesce(combined["inbox"], F.lit(0)).cast("long")
+        new_bits = inbox.bitwiseAND(F.bitwise_not(state["mask"]))
+        nb = F.bit_count(new_bits).cast("long")
+        return (
+            state.join(combined, state["id"] == combined["dst"], "left_outer")
+            .select(
                 state["id"],
                 state["mask"].bitwiseOR(inbox).alias("mask"),
                 new_bits.alias("fresh"),
@@ -128,23 +110,31 @@ def harmonic_sampled(
                 # depth is monotone: any fresh bit at t raises the bound
                 F.when(nb > 0, F.lit(t)).otherwise(state["ecc_lb"])
                 .cast("long").alias("ecc_lb"),
-            ))
-            aggs = run.aggregators(state, [
-                F.sum(F.bit_count(F.col("fresh")).cast("long")).alias(
-                    "new_bits"
-                ),
-            ])
-            run.record(depth=t, **aggs)
-            run.next_superstep()
-            if not aggs["new_bits"]:
-                break
-        result = state.select("id", "n_reached", "hnum", "dsum", "ecc_lb")
-    except BaseException:
-        # release the run's checkpointed state frames too, not just the
-        # edge cache — mirrors betweenness_sampled's failure path (the
-        # leak class test_no_cache_leak pins there)
-        run.release()
-        raise
-    e.unpersist()
-    run._edges_live = None
-    return result, run
+            )
+        )
+
+    program = VertexProgram(
+        name="harmonic",
+        init=init,
+        prep_edges=lambda e: symmetrize(e.select("src", "dst", "weight"))
+        .select("src", "dst"),
+        edge_cols=("src", "dst"),
+        msg_cols=[F.col("fresh").alias("m")],
+        active_filter=F.col("fresh") != 0,
+        combiner={"inbox": ("m", "bit_or")},
+        apply=apply,
+        aggregators=[
+            F.sum(F.bit_count(F.col("fresh")).cast("long")).alias("new_bits"),
+        ],
+        halt=lambda aggs: not aggs["new_bits"],
+        finalize=lambda s: s.select(
+            "id", "n_reached", "hnum", "dsum", "ecc_lb"
+        ),
+        params={"n_pivots": n_pivots, "max_depth": max_depth},
+    )
+    return pregel(
+        spark, edges, program,
+        max_supersteps=max_depth,
+        # 0 would skip prep_edges (pregel's prepared-edge handover)
+        edge_partitions=edge_partitions or None,
+    )

@@ -311,16 +311,13 @@ def onion_layers(
     Same pinned peel as ``k_core`` (round r removes every alive vertex
     whose alive-degree < k; monotone, so a capped run is exact for the
     rounds it ran and capped ≡ unrolled at any shared round count).
-    The round counter lives in the program ``ctx`` (apply runs exactly
-    once per superstep); checkpoint resume recomputes it as
-    max(layer) over the restored state.
+    Peel round r runs as superstep r - 1 (``ctx["superstep"]``).
 
     Execution shape: identical to k_core — one scatter + count-combine
     per round over the symmetrized edges; the layer column is one
     extra CASE in apply.  Returns (layers(id, layer), run)."""
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
-        ctx["round"] = 0
         return (
             e.select(F.col("src").alias("id")).distinct()
             .select(
@@ -329,12 +326,8 @@ def onion_layers(
             )
         )
 
-    def restore_ctx(state: DataFrame, ctx: dict) -> None:
-        ctx["round"] = state.agg(F.max("layer")).collect()[0][0] or 0
-
     def apply(state: DataFrame, combined: DataFrame, ctx: dict) -> DataFrame:
-        ctx["round"] = ctx.get("round", 0) + 1
-        rnd = ctx["round"]
+        rnd = ctx["superstep"] + 1
         deg = F.coalesce(combined["deg"], F.lit(0))
         removed_now = state["alive"] & (deg < k)
         return (
@@ -351,7 +344,6 @@ def onion_layers(
     program = VertexProgram(
         name="onion",
         init=init,
-        restore_ctx=restore_ctx,
         prep_edges=lambda e: symmetrize(e.select("src", "dst", "weight"))
         .select("src", "dst"),
         edge_cols=("src", "dst"),

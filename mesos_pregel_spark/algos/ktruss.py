@@ -44,6 +44,9 @@ invalidate it), so the full decomposition pays for exactly one global
 triangle enumeration plus the incremental deltas.  Capped variants
 are exact on both sides because each level's peel is monotone (the
 driver oracle unrolls the identical (level, round) schedule).
+
+Not a plans/program.py VertexProgram: both peel EDGES by their
+triangle support, a per-edge state no vertex message carries.
 """
 
 from __future__ import annotations

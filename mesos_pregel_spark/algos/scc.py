@@ -50,6 +50,9 @@ frontier-filtered scatters + combines over a semi-joined remaining
 subgraph, the same shuffle economics as CC; state is truncated with
 eager localCheckpoints at phase boundaries (the driver-loop analogue
 of the superstep loop's S3 rule).
+
+Not a plans/program.py VertexProgram: each outer round nests trim,
+color and backward fixpoints over a shrinking subgraph.
 """
 
 from __future__ import annotations

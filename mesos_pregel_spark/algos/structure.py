@@ -409,6 +409,10 @@ def densest_subgraph(
     best round's membership is recovered afterwards as
     {removed_round >= best_t} ∪ {never removed}, avoiding any growing
     per-round union in the loop (the SCC labeling trick).
+
+    Not a plans/program.py VertexProgram: round t's cut needs |E_t|,
+    a sum over that same round's inbox, while the barrier publishes
+    aggregates only after the round ends.
     """
     run = PregelRun(spark, "densest_subgraph")
     und = canonical_undirected(edges)

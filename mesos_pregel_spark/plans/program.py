@@ -25,10 +25,14 @@ machinery applied uniformly: edges repartitioned by ``src`` once and
 persisted, hub-salted two-stage combines (S1), hard lineage truncation
 per superstep (S3), frontier-size-driven broadcast swap (SURVEY §4.3),
 checkpoint/resume (P8) and per-superstep metrics (S4).  The built-in
-algorithms (algos/pagerank.py, cc.py, lpa.py, sssp.py) are thin
-wrappers constructing a VertexProgram — a user's custom algorithm is
-the same ~20 declarative lines (see
-tests/test_program.py::test_custom_program_max_propagation).
+iterative algorithms (algos/pagerank.py, cc.py, lpa.py, sssp.py,
+kcore.py, msbfs.py, harmonic.py, betweenness.py, among others) are
+thin wrappers constructing a VertexProgram — a user's custom
+algorithm is the same ~20 declarative lines (see
+tests/test_program.py::test_custom_program_max_propagation).  The
+modules that still drive ``PregelRun`` by hand (boruvka.py, ktruss.py,
+scc.py, structure.py::densest_subgraph) say in their docstrings why
+they are not vertex programs.
 """
 
 from __future__ import annotations
@@ -52,7 +56,11 @@ class VertexProgram:
     ``ctx`` is a plain dict threaded through the run: ``init`` /
     ``restore_ctx`` may stash graph-level constants (vertex count,
     source id), and the loop publishes each superstep's aggregator
-    values under ``ctx["aggs"]`` before the next ``apply``.
+    values under ``ctx["aggs"]`` before the next ``apply``.  Before
+    every ``apply`` it also sets ``ctx["superstep"]`` to the 0-based
+    number of the superstep being computed (restored from the
+    checkpoint on resume), so round-numbered programs need no counter
+    of their own.
     """
 
     name: str
@@ -303,6 +311,7 @@ def _pregel_loop(
         if program.post_combine is not None:
             combined = program.post_combine(combined)
 
+        ctx["superstep"] = run.superstep
         new_state = program.apply(state, combined, ctx)
         new_state = run.materialize(new_state)
         aggs = run.aggregators(new_state, list(program.aggregators))

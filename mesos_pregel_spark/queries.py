@@ -7969,87 +7969,15 @@ _ALL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # The driver verifies only the FIRST 50 entries of queries() (insertion
 # order) against the DuckDB oracles — verified against CORRECTNESS_r03/r04
 # (r4 key list == the registry's first 50).  The registry is therefore
-# ordered by verification priority, not by topic:
-#
-#   tier 1 — queries with no green official CORRECTNESS row yet (r4's
-#            over-cap 18: the multimodal fix plus the six new text
-#            operators, and the r3-green text/ANN stack pushed out in r4);
-#   tier 2 — queries new this round;
-#   tier 2b and below — PAST THE 50-SLOT WINDOW (the window closes after
-#            "length_histogram"): 2b holds r3-green ANN rows demoted to
-#            fit tier 2 in-window;
-#   tier 3 — one representative per operator family (all green in r4);
-#   tier 4 — step-count variants of operators whose
-#            representative sits in tier 3, each green in ≥1 prior round
-#            (r1–r4) and still exercised by tests/test_driver_contract.py,
-#            which replays the driver protocol over ALL entries at sf0.001.
+# ordered by verification priority, not by topic: every query without a
+# green row in any official CORRECTNESS_r*.json comes first, so no window
+# slot is spent on an already-green query while a never-green one waits
+# (pinned by tests/test_registry.py).  Queries past the window are still
+# exercised by tests/test_driver_contract.py, which replays the driver
+# protocol over ALL entries at sf0.001.
 _QUERY_PRIORITY: list[str] = [
-    # --- tier 1: never officially driver-verified (r4 over-cap) ---
-    "multimodal_features",
-    "decontaminate",
-    "stratified_sample",
-    "sample_budget",
-    "pii_redact",
-    "repetition_ratio",
-    "pack_concat",
-    # --- tier 2: new this round ---
-    "betweenness",
-    "matching",
-    "semi_clusters",
-    "kmeans",
-    "tfidf_topk",
-    "cluster_balanced_sample",
-    "boruvka_msf",
-    "unigram_quality",
-    "bigram_quality",
-    "winnow_fp",
-    "overlap_candidates",
-    "community_stats",
-    "modularity",
-    "link_prediction_ra",
-    "greedy_modularity",
-    "harmonic",
-    "eccentricity",
-    "salsa_step4",
-    "four_cliques",
-    "avg_neighbor_degree",
-    "edge_embeddedness",
-    "butterflies",
-    "edges_daily",
-    "reciprocity",
-    "triad_census",
-    "rank_drift",
-    "rich_club",
-    "edge_drift",
-    "bursts",
-    "pagerank_daily",
-    "cc_daily",
-    "katz_step4",
-    "edge_delta",
-    "weighted_clustering",
-    "source_mix",
-    "vocab_stats",
-    "length_histogram",
-    "link_prediction_aa",
-    # --- tier 2c: new this session (each displaces one r3-green dedup
-    #     row from tier 1 into tier 2b below) ---
-    "span_dedup",
-    "source_kl",
-    "chunk_windows",
-    "ngram_hotspots",
-    "closeness",
-    # ----------------- driver's 50-query window ends here -----------------
-    # pmi_topk is new this session but sits just PAST the window: all 50
-    # slots are taken by equally-never-green queries, so displacing one
-    # gains nothing; its exact twin is verified by the in-repo driver-
-    # protocol replica (tests/test_driver_contract.py) at sf0.001 and by
-    # scripts/sweep_sf001_window.py at sf0.01.
+    # --- never green in an official round (87 after round 5) ---
     "pmi_topk",
-    # markov/spread/agreement/khop are new this session and ALSO sit
-    # just past the window for the same reason as pmi_topk: all 50
-    # slots already hold equally-never-green queries, so displacing
-    # one gains nothing; their twins are verified by the in-repo
-    # driver-protocol replica at sf0.001 and the sf0.01 full sweep.
     "markov_step8",
     "lt_spread",
     "lpa_cc_agreement",
@@ -8099,6 +8027,7 @@ _QUERY_PRIORITY: list[str] = [
     "funnel_conversion",
     "motif_significance",
     "coarsen_partition_gain",
+    # ----------------- driver's 50-query window ends here -----------------
     "brand_conductance",
     "coarsen_heavy",
     "simhash_candidates",
@@ -8111,9 +8040,83 @@ _QUERY_PRIORITY: list[str] = [
     "packing_report",
     "quality_vs_dup",
     "session_histogram",
-    # --- tier 2b: r3-green ANN rows demoted to fit tier 2 in-window
-    #     (ivf_topk demoted last: r3-green, bumped for link_prediction_aa;
-    #     corpus_clean/simhash r3-green, bumped for span_dedup/source_kl) ---
+    "condensation_levels",
+    "dag_levels",
+    "tred_profile",
+    "bipartite_cc",
+    "label_spreading",
+    "s_core",
+    "burstiness",
+    "gap_percentiles",
+    "core_periphery",
+    "hitting_time",
+    "clique_communities",
+    "dispersion",
+    "cluster_split",
+    "fertility",
+    "edge_betweenness",
+    "circadian",
+    "vocab_coverage",
+    "forman_curvature",
+    "ego_net",
+    "ic_spread",
+    "mrl_recall",
+    "graph_hygiene",
+    "coreness_mixing",
+    "lexical_pairs",
+    "percolation_profile",
+    # --- green in at least one official round (r1–r5), in their
+    #     previous priority order ---
+    "multimodal_features",
+    "decontaminate",
+    "stratified_sample",
+    "sample_budget",
+    "pii_redact",
+    "repetition_ratio",
+    "pack_concat",
+    "betweenness",
+    "matching",
+    "semi_clusters",
+    "kmeans",
+    "tfidf_topk",
+    "cluster_balanced_sample",
+    "boruvka_msf",
+    "unigram_quality",
+    "bigram_quality",
+    "winnow_fp",
+    "overlap_candidates",
+    "community_stats",
+    "modularity",
+    "link_prediction_ra",
+    "greedy_modularity",
+    "harmonic",
+    "eccentricity",
+    "salsa_step4",
+    "four_cliques",
+    "avg_neighbor_degree",
+    "edge_embeddedness",
+    "butterflies",
+    "edges_daily",
+    "reciprocity",
+    "triad_census",
+    "rank_drift",
+    "rich_club",
+    "edge_drift",
+    "bursts",
+    "pagerank_daily",
+    "cc_daily",
+    "katz_step4",
+    "edge_delta",
+    "weighted_clustering",
+    "source_mix",
+    "vocab_stats",
+    "length_histogram",
+    "link_prediction_aa",
+    "span_dedup",
+    "source_kl",
+    "chunk_windows",
+    "ngram_hotspots",
+    "closeness",
     "minhash_lsh_candidates",
     "near_duplicates",
     "dedup_clusters",
@@ -8125,7 +8128,6 @@ _QUERY_PRIORITY: list[str] = [
     "cosine_topk",
     "embedding_near_dups",
     "ann_lsh_topk",
-    # --- tier 3: one representative per family (green r4) ---
     "edge_extract",
     "pagerank_full",
     "pagerank_conv",
@@ -8144,9 +8146,6 @@ _QUERY_PRIORITY: list[str] = [
     "mis",
     "coloring",
     "coloring_spec",
-    # --- tier 4: variants of tier-3 operators, green in prior rounds,
-    #     plus r4/r5-green rows rotated out to make room for new queries
-    #     (walks, anf, centralities, graph_summary, sessions: r4 rows) ---
     "degrees",
     "walks",
     "anf",
@@ -8179,34 +8178,6 @@ _QUERY_PRIORITY: list[str] = [
     "language_id",
     "doc_fingerprint",
     "dedup_exact",
-    # round-5 continuation — appended AFTER the driver's 50-query
-    # window so the front-loaded, never-officially-checked entries
-    # keep their slots; covered by the in-repo full-registry sweep
-    "condensation_levels",
-    "dag_levels",
-    "tred_profile",
-    "bipartite_cc",
-    "label_spreading",
-    "s_core",
-    "burstiness",
-    "gap_percentiles",
-    "core_periphery",
-    "hitting_time",
-    "clique_communities",
-    "dispersion",
-    "cluster_split",
-    "fertility",
-    "edge_betweenness",
-    "circadian",
-    "vocab_coverage",
-    "forman_curvature",
-    "ego_net",
-    "ic_spread",
-    "mrl_recall",
-    "graph_hygiene",
-    "coreness_mixing",
-    "lexical_pairs",
-    "percolation_profile",
 ]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

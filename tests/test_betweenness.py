@@ -5,9 +5,14 @@ exclusion, bounded-radius truncation, lane-vs-sequential equality."""
 import hashlib
 from collections import defaultdict, deque
 
+import pytest
 from pyspark.sql import functions as F
 
-from mesos_pregel_spark.algos.betweenness import betweenness_sampled
+from mesos_pregel_spark.algos.betweenness import (
+    betweenness_sampled,
+    edge_betweenness_sampled,
+)
+from mesos_pregel_spark.algos.harmonic import harmonic_sampled
 
 
 def _df(spark, pairs):
@@ -201,3 +206,26 @@ def test_edge_betweenness_bridge_dominates(spark):
     rows = [(r["lo"], r["hi"], r["ebc"]) for r in got_df.collect()]
     top = max(rows, key=lambda r: r[2])
     assert (top[0], top[1]) == ("c", "d")
+
+
+@pytest.mark.parametrize("algo", [
+    harmonic_sampled, betweenness_sampled, edge_betweenness_sampled,
+])
+def test_empty_edge_set_gives_no_rows(spark, algo):
+    """No edges, no vertices: every pivot-sampled sweep returns an
+    empty frame (the pivot lanes stay empty) instead of raising."""
+    empty = spark.createDataFrame([], "src string, dst string, weight double")
+    out, _run = algo(spark, empty, max_depth=4)
+    assert out.collect() == []
+
+
+def test_edge_betweenness_result_does_not_recompute_its_input(spark):
+    """The top-k is materialized before the symmetrized edge table is
+    released: the returned frame is a scan of at most top_k rows, not
+    a plan of joins that would rebuild the edges from the raw input."""
+    got_df, _run = edge_betweenness_sampled(
+        spark, _df(spark, PAIRS), n_pivots=4, max_depth=10, edge_partitions=2, top_k=5,
+    )
+    plan = got_df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert got_df.count() == 5

@@ -16,10 +16,15 @@ from pyspark.sql import functions as F
 
 from tests.conftest import id_space
 
+from mesos_pregel_spark.algos.betweenness import (
+    betweenness_sampled,
+    edge_betweenness_sampled,
+)
 from mesos_pregel_spark.algos.cc import (
     connected_components,
     connected_components_jump,
 )
+from mesos_pregel_spark.algos.harmonic import harmonic_sampled
 from mesos_pregel_spark.algos.pagerank import pagerank
 from mesos_pregel_spark.fixtures import micro_graph_df
 from mesos_pregel_spark.functions.edges import symmetrize
@@ -163,6 +168,9 @@ _BUILT_INS = {
     "pagerank_weighted": lambda spark, e: pagerank(spark, e, weighted=True),
     "cc": lambda spark, e: connected_components(spark, e),
     "cc_jump": lambda spark, e: connected_components_jump(spark, e),
+    "harmonic": lambda spark, e: harmonic_sampled(spark, e),
+    "betweenness": lambda spark, e: betweenness_sampled(spark, e),
+    "edge_betweenness": lambda spark, e: edge_betweenness_sampled(spark, e),
 }
 
 
