@@ -131,7 +131,6 @@ def neighborhood_sketches(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
     extra_aggregators: list[Column] | None = None,
 ) -> tuple[DataFrame, PregelRun]:
@@ -193,7 +192,6 @@ def neighborhood_sketches(
             *(extra_aggregators or []),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select("id", *regs),
         converged_at_cap=True,  # an h-capped run IS the radius-h answer
         params={"h": h, "k": k, "seed": seed},
@@ -203,7 +201,6 @@ def neighborhood_sketches(
         max_supersteps=h,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )
 
@@ -234,7 +231,6 @@ def centralities(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """HyperBall's actual read-outs (Boldi-Vigna): per-vertex HARMONIC
@@ -319,7 +315,6 @@ def centralities(
         apply=apply,
         aggregators=[F.sum(F.col("changed").cast("long")).alias("active")],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id",
             F.col("est").alias("nf"),
@@ -334,7 +329,6 @@ def centralities(
         max_supersteps=h,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )
 

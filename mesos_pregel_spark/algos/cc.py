@@ -9,8 +9,7 @@ example [P §3.2]):
 - Frontier/delta optimization: only vertices whose comp changed last
   superstep send (exactly Pregel's vote-to-halt — a vertex halts when
   its value stops changing and is reactivated by an incoming smaller
-  label).  The runner swaps the scatter join to broadcast-hash when
-  the frontier falls under ``broadcast_threshold`` rows (SURVEY §4.3).
+  label).
 - Terminate when no vertex changed.  EXACT match required.
 
 Expressed as a :class:`VertexProgram` on plans/program.py.
@@ -84,7 +83,6 @@ def _cc_program(name: str, init, apply) -> VertexProgram:
             F.count(F.lit(1)).alias("n_vertices"),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select("id", F.col("comp").alias("component")),
     )
 
@@ -97,7 +95,6 @@ def connected_components(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int = 100_000,
     edge_partitions: int | None = None,
     prev_labels: DataFrame | None = None,
     delta_edges: DataFrame | None = None,
@@ -160,7 +157,6 @@ def connected_components(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )
 

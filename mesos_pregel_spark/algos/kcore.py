@@ -44,7 +44,6 @@ def k_core(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
     prune_edges: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
@@ -115,7 +114,6 @@ def k_core(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )
 

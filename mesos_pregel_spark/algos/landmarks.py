@@ -40,7 +40,6 @@ def landmark_distances(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Distances from every vertex of ``landmarks`` (≤ 16) at once.
@@ -100,7 +99,6 @@ def landmark_distances(
             F.sum(F.col("changed").cast("long")).alias("active"),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id",
             *[
@@ -116,6 +114,5 @@ def landmark_distances(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )

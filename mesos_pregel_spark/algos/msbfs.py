@@ -44,7 +44,6 @@ def multi_source_bfs(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Directed reachability masks from ``sources`` (≤ 63).  Returns
@@ -101,7 +100,6 @@ def multi_source_bfs(
             F.sum(F.col("changed").cast("long")).alias("active"),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select("id", "mask"),
         params={"sources": [str(s) for s in srcs]},
     )
@@ -110,6 +108,5 @@ def multi_source_bfs(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )

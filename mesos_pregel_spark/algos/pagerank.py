@@ -13,10 +13,11 @@ paragraph):
 - Converge when max_v |pr'_v − pr_v| < tol (1e-6, BASELINE.json:2).
 
 Expressed as a :class:`VertexProgram` on the generic superstep runner
-(plans/program.py): scatter join (edges pre-partitioned by src,
-persisted — only the small vertex state shuffles) → sum combiner (hash
-agg with automatic map-side partials; optional explicit salting for
-hub skew) → damping expression.
+(plans/program.py): scatter join (edges pre-partitioned by src and
+persisted, the state hash-partitioned by id into the same partitions —
+no exchange on either side) → sum combiner (hash agg with map-side
+partials before the one message exchange by dst; optional explicit
+salting for hub skew) → damping expression.
 """
 
 from __future__ import annotations
@@ -61,15 +62,9 @@ def pagerank(
     n_salt: int = 0,
     salt_hot_k: int = 0,
     edge_partitions: int | None = None,
-    broadcast_threshold: int | None = None,
     weighted: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
     """Run PageRank to convergence.  Returns (ranks(id, pagerank), run).
-
-    ``broadcast_threshold``: when set and the vertex count stays under
-    it, the scatter join broadcasts the state side instead of shuffling
-    it (PageRank has no shrinking frontier, so this is a static |V|
-    decision, unlike CC/SSSP's per-superstep swap).
 
     ``weighted=True`` distributes a vertex's rank proportionally to
     edge weight instead of uniformly:
@@ -86,7 +81,6 @@ def pagerank(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )
 
@@ -173,7 +167,6 @@ def pagerank_program(
             F.count(F.lit(1)).alias("n_vertices"),
         ],
         halt=lambda aggs: aggs["max_delta"] < tol,
-        frontier_agg="n_vertices",
         finalize=lambda s: s.select("id", F.col("pr").alias("pagerank")),
         params={"damping": damping, "tol": tol, "weighted": weighted},
     )

@@ -119,7 +119,6 @@ def lt_spread(
         apply=apply,
         aggregators=[F.sum(F.col("changed").cast("long")).alias("active")],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id", F.coalesce("round", F.lit(-1)).alias("round")
         ),
@@ -235,7 +234,6 @@ def lt_sweep(
             F.sum(any_changed.cast("long")).alias("active"),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id",
             *[F.coalesce(f"r{i}", F.lit(-1)).alias(f"r{i}") for i in range(n)],

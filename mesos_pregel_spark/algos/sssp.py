@@ -37,7 +37,6 @@ def shortest_paths(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int = 100_000,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run SSSP from ``source``.  Returns (dists(id, distance), run)
@@ -84,7 +83,6 @@ def shortest_paths(
             F.sum(F.when(F.col("dist") != _INF, 1).otherwise(0)).alias("reached"),
         ],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id",
             F.when(F.col("dist") == _INF, F.lit(None).cast("double"))
@@ -97,6 +95,5 @@ def shortest_paths(
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         n_salt=n_salt, salt_hot_k=salt_hot_k,
-        broadcast_threshold=broadcast_threshold,
         edge_partitions=edge_partitions,
     )

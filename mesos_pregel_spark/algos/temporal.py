@@ -148,7 +148,6 @@ def temporal_reach(
         apply=apply,
         aggregators=[F.sum(F.col("changed").cast("long")).alias("active")],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select(
             "id",
             F.when(F.col("arr") >= _INF, F.lit(None).cast("long"))

@@ -7,14 +7,15 @@ pre-partitioned, persisted) edge table with the active vertex state,
 projecting ``(dst, msg)``.
 
 Scale notes:
-- The edge table is repartitioned by ``src`` ONCE and persisted, so
-  every superstep's scatter join reuses that partitioning: only the
-  (small) vertex-state side shuffles.
-- When the active frontier is small (late CC/LPA supersteps) the
-  driver passes ``broadcast=True`` and the join degrades to a
-  broadcast-hash join — no shuffle at all (SURVEY §4.3 frontier
-  broadcast; the optimizer can't know frontier size across supersteps,
-  the driver does, from the P5 aggregators).
+- The edge table is repartitioned by ``src`` ONCE and persisted, and
+  the Pregel loop keeps the vertex state hash-partitioned by ``id``
+  into the same number of partitions (plans/program.py), so the join
+  needs no exchange on either side: nothing shuffles here.  The state
+  is named as the hash-join build side with a ``shuffle_hash`` hint,
+  because truncated state carries no size estimate to choose one by
+  (plans/truncate.py).
+- A caller whose state is not partitioned that way still gets a
+  correct join; Spark then shuffles the sides it must.
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ def scatter(
     vertices: DataFrame,
     msg_cols: Sequence[Column],
     active_filter: Column | None = None,
-    broadcast: bool = False,
 ) -> DataFrame:
     """Join edges (src, dst, weight) with vertex state on src == id and
     project message columns.
@@ -43,7 +43,6 @@ def scatter(
     v = vertices
     if active_filter is not None:
         v = v.where(active_filter)
-    if broadcast:
-        v = F.broadcast(v)
+    v = v.hint("shuffle_hash")
     joined = edges.join(v, edges["src"] == v["id"], "inner")
     return joined.select(F.col("dst"), *msg_cols)

@@ -6,10 +6,22 @@ metrics)`` every k supersteps; resume mid-iteration bit-identically.
 Storage: Iceberg when the session has an Iceberg catalog configured;
 otherwise a partitioned-parquet + ``_meta.json`` manifest layout that
 mimics a snapshot (SURVEY §7.6 risk 1 — no Iceberg jars in this
-sandbox, the code path to Iceberg is config-only).  Writes are atomic
-per checkpoint: data lands in ``superstep=NNNNNN/`` and the manifest
-``_meta.json`` is written last — resume reads the newest directory
-that has a manifest.
+sandbox, the code path to Iceberg is config-only).  A step is
+resumable exactly while its ``_meta.json`` exists, and the manifest
+never names data that is not there: a write lands in a temp dir; if
+the step already holds data, its manifest is removed BEFORE that data
+is deleted; the temp dir is swapped in; the manifest is written last.
+A crash at any point leaves either the old complete step, a step
+without a manifest (``latest`` skips it and resume falls back to the
+previous one), or the new complete step.
+
+Per-partition lineage (BASELINE.json:6): the manifest maps each state
+partition — the index in the part file's name, which is the Spark
+partition that wrote it — to its row count, read from the parquet
+footers on the driver, so no Spark job is spent on it.  Partitions
+with no rows write no file and are absent.  The Pregel loop keeps its
+state hash-partitioned by ``id`` (plans/program.py), so the keys are
+the state's hash partitions.
 
 Bit-identity contract (SURVEY §4.3): the checkpoint is the source of
 truth.  Resume reads the exact stored values (parquet round-trips
@@ -25,10 +37,33 @@ import re
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _STEP_DIR = re.compile(r"^superstep=(\d{6})$")
+_PART_FILE = re.compile(r"^part-(\d+)-.*\.parquet$")
+_META = "_meta.json"
+
+
+def _dump_json(obj: dict, path: str) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, sort_keys=True, default=str)
+    os.replace(tmp, path)
+
+
+def _partition_lineage(data_path: str) -> dict[str, int]:
+    """Rows per writing partition, from the part files' footers."""
+    counts: dict[str, int] = {}
+    for name in os.listdir(data_path):
+        m = _PART_FILE.match(name)
+        if not m:
+            continue
+        rows = pq.read_metadata(os.path.join(data_path, name)).num_rows
+        if rows:
+            key = str(int(m.group(1)))
+            counts[key] = counts.get(key, 0) + rows
+    return counts
 
 
 class CheckpointManager:
@@ -40,9 +75,22 @@ class CheckpointManager:
     def _step_dir(self, superstep: int) -> str:
         return os.path.join(self.directory, f"superstep={superstep:06d}")
 
+    def _swap_in(self, path: str, tmp_path: str, data_path: str) -> None:
+        """Replace ``data_path`` with ``tmp_path``.  If old data is
+        there, the step's manifest goes first, so no crash can leave a
+        manifest that names deleted data (module docstring)."""
+        if os.path.exists(data_path):
+            meta_path = os.path.join(path, _META)
+            if os.path.exists(meta_path):
+                os.remove(meta_path)
+            shutil.rmtree(data_path)
+        os.replace(tmp_path, data_path)
+
     def write(self, vertices: DataFrame, superstep: int, meta: dict) -> DataFrame:
         """Write vertex state + manifest; return the re-read (lineage-
-        truncated) DataFrame so the caller continues from storage.
+        truncated) DataFrame so the caller continues from storage.  The
+        write is the one Spark job: the re-read uses the known schema
+        and the lineage comes from the footers.
 
         The write lands in a temp dir and is swapped in afterwards:
         ``vertices``' own lineage may read THIS superstep's previous
@@ -54,29 +102,15 @@ class CheckpointManager:
         data_path = os.path.join(path, "vertices")
         tmp_path = os.path.join(path, "_vertices.tmp")
         vertices.write.mode("overwrite").parquet(tmp_path)
-        if os.path.exists(data_path):
-            shutil.rmtree(data_path)
-        os.replace(tmp_path, data_path)
-        reread = self.spark.read.parquet(data_path)
-        # Per-partition lineage: row count per physical partition of the
-        # state as stored (BASELINE.json:6 "per-partition lineage").
-        part_counts = (
-            reread.groupBy(F.spark_partition_id().alias("partition"))
-            .count()
-            .orderBy("partition")
-            .collect()
-        )
+        self._swap_in(path, tmp_path, data_path)
         manifest = {
             "superstep": superstep,
             "written_at": time.time(),
-            "partition_lineage": {str(r["partition"]): r["count"] for r in part_counts},
+            "partition_lineage": _partition_lineage(data_path),
             **meta,
         }
-        tmp = os.path.join(path, "_meta.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True, default=str)
-        os.replace(tmp, os.path.join(path, "_meta.json"))
-        return reread
+        _dump_json(manifest, os.path.join(path, _META))
+        return self.spark.read.schema(vertices.schema).parquet(data_path)
 
     def latest(self, include_final: bool = True) -> tuple[int, dict] | None:
         """Newest superstep with a complete manifest, or None.  With
@@ -88,7 +122,7 @@ class CheckpointManager:
             m = _STEP_DIR.match(name)
             if not m:
                 continue
-            meta_path = os.path.join(self.directory, name, "_meta.json")
+            meta_path = os.path.join(self.directory, name, _META)
             if not os.path.exists(meta_path):
                 continue  # incomplete write — ignore
             with open(meta_path) as f:
@@ -116,23 +150,19 @@ class CheckpointManager:
 
     def write_edges(self, edges: DataFrame, superstep: int) -> None:
         path = self._step_dir(superstep)
-        data_path = os.path.join(path, "edges")
+        meta_path = os.path.join(path, _META)
+        meta = None
+        if os.path.exists(meta_path):  # record the snapshot in lineage
+            with open(meta_path) as f:
+                meta = json.load(f)
         tmp_path = os.path.join(path, "_edges.tmp")
         edges.write.mode("overwrite").option("compression", "zstd").parquet(
             tmp_path
         )
-        if os.path.exists(data_path):
-            shutil.rmtree(data_path)
-        os.replace(tmp_path, data_path)
-        meta_path = os.path.join(path, "_meta.json")
-        if os.path.exists(meta_path):  # record the snapshot in lineage
-            with open(meta_path) as f:
-                meta = json.load(f)
+        self._swap_in(path, tmp_path, os.path.join(path, "edges"))
+        if meta is not None:
             meta["edges_snapshot"] = True
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(meta, f, indent=2, sort_keys=True, default=str)
-            os.replace(tmp, meta_path)
+            _dump_json(meta, meta_path)
 
     def has_edges(self, superstep: int) -> bool:
         return os.path.isdir(os.path.join(self._step_dir(superstep), "edges"))

@@ -8,10 +8,10 @@ each superstep builds ONE declarative DataFrame plan (scatter → combine
 
 The classic iterative-DataFrame failure is lineage/plan blow-up: every
 superstep's plan embeds the previous one, so analysis time grows
-without bound.  ``PregelRun.materialize`` persists each new state,
-unpersists the previous one, and hard-truncates the plan every
-``truncate_every`` supersteps — via the durable checkpoint when one is
-configured (doubling as fault tolerance), else ``localCheckpoint``.
+without bound.  ``PregelRun.materialize`` hard-truncates every new
+state (plans/truncate.py) — on checkpoint supersteps the truncated
+frame is the durable checkpoint's re-read, which doubles as fault
+tolerance — and ``reap`` releases the superseded one.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import time
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.plans.checkpoint import CheckpointManager
 from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
@@ -51,6 +50,9 @@ class PregelRun:
         # the loop-owned persisted edge table (program.py sets/clears
         # it) — released with the live state on the failure path
         self._edges_live: DataFrame | None = None
+        # the state's hash-partition count by id (program.py sets it);
+        # a checkpoint re-read is repartitioned back to it
+        self.partitions: int | None = None
         self._t0 = time.monotonic()
 
     # ---- resume ------------------------------------------------------
@@ -105,15 +107,21 @@ class PregelRun:
         (eager) replaces the plan with an O(1) scan of the materialized
         partitions; on checkpoint supersteps the durable parquet
         write/read-back does the same job and doubles as fault
-        tolerance.  Superseded state RDDs are dropped by Spark's
-        ContextCleaner once unreferenced."""
+        tolerance.  Superseded state RDDs are released by reap()."""
         s = self.superstep
         if durable and self.ckpt is not None and s % self.checkpoint_every == 0:
             new = self.ckpt.write(
                 vertices, s,
                 {"algorithm": self.algorithm, "params": self.params, **(meta or {})},
             )
-            new = new.persist(StorageLevel.MEMORY_AND_DISK)
+            # The write is this superstep's only extra job: the re-read
+            # is truncated lazily like any other state.  Parquet loses
+            # the partitioning, so restore it; and a plain parquet scan
+            # carries small size estimates, which would let Spark
+            # broadcast it again.
+            if self.partitions:
+                new = new.repartition(self.partitions, "id")
+            new = truncate_plan(new, eager=False)
         else:
             # Lazy: the checkpoint materializes inside the caller's next
             # action (the P5 aggregator collect), so each superstep runs

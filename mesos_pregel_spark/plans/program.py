@@ -22,10 +22,14 @@ pieces Pregel's ``Compute`` callback owns:
 
 :func:`pregel` runs the superstep loop with the engine's scale
 machinery applied uniformly: edges repartitioned by ``src`` once and
-persisted, hub-salted two-stage combines (S1), hard lineage truncation
-per superstep (S3), frontier-size-driven broadcast swap (SURVEY §4.3),
-checkpoint/resume (P8) and per-superstep metrics (S4).  The built-in
-iterative algorithms (algos/pagerank.py, cc.py, lpa.py, sssp.py,
+persisted, the vertex state hash-partitioned by ``id`` into the same
+partitions for the whole run so that a superstep's only shuffle is the
+message exchange by ``dst`` [P §4.1], map-side partial aggregation of
+messages before that exchange (Pregel's combiners [P §3.2]), hard
+lineage truncation per superstep (S3), checkpoint/resume (P8) and
+per-superstep metrics (S4).  Hub-salted two-stage combines (S1) are
+available through ``n_salt``/``salt_hot_k`` but off by default.  The
+built-in iterative algorithms (algos/pagerank.py, cc.py, lpa.py, sssp.py,
 kcore.py, msbfs.py, harmonic.py, betweenness.py, among others) are
 thin wrappers constructing a VertexProgram — a user's custom
 algorithm is the same ~20 declarative lines (see
@@ -47,6 +51,7 @@ from pyspark.storagelevel import StorageLevel
 from mesos_pregel_spark.operators.combine import combine
 from mesos_pregel_spark.operators.scatter import scatter
 from mesos_pregel_spark.plans.pregel import PregelRun
+from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
 
 
 @dataclass
@@ -83,9 +88,6 @@ class VertexProgram:
     combine_keys: Sequence[str] = ("dst",)
     # Vote-to-halt: restrict the sending side (e.g. F.col("changed")).
     active_filter: Column | None = None
-    # Name of the aggregator output holding the frontier size, for the
-    # driver-side broadcast-join swap when it falls under threshold.
-    frontier_agg: str | None = None
     # Raw edges -> prepared edges (symmetrize, collapse, project).
     prep_edges: Callable[[DataFrame], DataFrame] | None = None
     # Post-combine transform (e.g. LPA's argmax over per-label sums).
@@ -127,7 +129,6 @@ def pregel(
     checkpoint_every: int = 10,
     n_salt: int = 0,
     salt_hot_k: int = 0,
-    broadcast_threshold: int | None = None,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run ``program`` to its halt condition (or the superstep cap).
@@ -136,8 +137,11 @@ def pregel(
     ``edge_partitions=0`` means the caller already projected,
     partitioned and persisted the edge table (one-time setup amortized
     across jobs); any other value repartitions by ``src`` and persists
-    here so every superstep's scatter join reuses the partitioning and
-    only the small vertex-state side shuffles.
+    here.  Either way the vertex state is hash-partitioned by ``id``
+    into the edge table's partition count, and the run pins
+    ``spark.sql.shuffle.partitions`` to that count, so the scatter
+    join and apply's join need no exchange and only the messages
+    shuffle.
     """
     # converged_at_cap programs (sync-LPA, peeling) treat the superstep
     # cap as part of their SEMANTICS — a capped run is a final answer
@@ -173,12 +177,12 @@ def pregel(
     # measured between those two points; see BENCH notes).
     # Skew remains handled by explicit salting (S1) in both regimes.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         return _pregel_loop(
             spark, edges, program, run, resumed,
             max_supersteps=max_supersteps,
             n_salt=n_salt, salt_hot_k=salt_hot_k,
-            broadcast_threshold=broadcast_threshold,
             edge_partitions=edge_partitions,
         )
     except BaseException:
@@ -189,6 +193,7 @@ def pregel(
         raise
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
 
 
 # Loop-AQE auto crossover: below this edge count the superstep loop is
@@ -209,7 +214,6 @@ def _pregel_loop(
     max_supersteps: int,
     n_salt: int,
     salt_hot_k: int,
-    broadcast_threshold: int | None,
     edge_partitions: int | None,
 ) -> tuple[DataFrame, PregelRun]:
 
@@ -257,6 +261,7 @@ def _pregel_loop(
             )
         e = edges.select(*program.edge_cols)
         n_edges = e.count()  # cheap: contract says caller persisted
+        nparts = e.rdd.getNumPartitions()
     else:
         e = program.prep_edges(edges) if program.prep_edges else edges
         e = e.repartition(nparts, "src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -267,10 +272,18 @@ def _pregel_loop(
         "spark.sql.adaptive.enabled",
         "true" if n_edges > AQE_EDGE_THRESHOLD else "false",
     )
+    # Pregel's fixed partitioning [P §4.1]: the state is hash-
+    # partitioned by id into the edge table's nparts partitions for the
+    # whole run, and the message combine shuffles into the same nparts,
+    # so the scatter join and apply's join need no exchange: a
+    # superstep's only shuffle is the message exchange by dst.
+    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
+    run.partitions = nparts
 
     ctx: dict = {"aggs": {}, "n_edges": n_edges}
     if resumed is not None:
-        state = resumed
+        # parquet does not keep the partitioning: restore it once
+        state = run.materialize(resumed.repartition(nparts, "id"), durable=False)
         if program.restore_ctx is not None:
             program.restore_ctx(state, ctx)
     else:
@@ -279,7 +292,9 @@ def _pregel_loop(
         # first post-apply checkpoint writes, making that write read
         # its own (deleted) input.  Resume semantics want the POST-
         # apply state of superstep s anyway.
-        state = run.materialize(program.init(e, ctx), durable=False)
+        state = run.materialize(
+            program.init(e, ctx).repartition(nparts, "id"), durable=False
+        )
 
     hot = None
     if n_salt > 0 and salt_hot_k > 0:
@@ -288,21 +303,11 @@ def _pregel_loop(
 
     converged = False
     while run.superstep < max_supersteps:
-        frontier = (
-            ctx["aggs"].get(program.frontier_agg)
-            if program.frontier_agg else None
-        )
-        use_broadcast = (
-            broadcast_threshold is not None
-            and frontier is not None
-            and frontier <= broadcast_threshold
-        )
         msgs = scatter(
             e,
             state,
             [*program.msg_cols, F.col("src").alias("msrc")],
             active_filter=program.active_filter,
-            broadcast=use_broadcast,
         )
         combined = combine(
             msgs, list(program.combine_keys), program.combiner,
@@ -312,7 +317,9 @@ def _pregel_loop(
             combined = program.post_combine(combined)
 
         ctx["superstep"] = run.superstep
-        new_state = program.apply(state, combined, ctx)
+        # A no-op when apply kept the state's partitioning (Spark drops
+        # a repartition its child already satisfies).
+        new_state = program.apply(state, combined, ctx).repartition(nparts, "id")
         new_state = run.materialize(new_state)
         aggs = run.aggregators(new_state, list(program.aggregators))
         run.record(**aggs)
@@ -326,14 +333,16 @@ def _pregel_loop(
         if program.mutate_edges is not None:
             new_e = program.mutate_edges(e, state, ctx)
             if new_e is not None:
-                # materialize the mutated table fully (persist + count)
-                # BEFORE dropping the old one its lineage reads
-                new_e = new_e.repartition(nparts, "src").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
+                # materialize the mutated table (eager truncation, so
+                # it no longer reads the state or the old table) BEFORE
+                # dropping the old one.  A persisted plan would still
+                # reference them, and releasing the old table would make
+                # Spark rebuild the new cache later, after reap() has
+                # freed the state it reads.
+                new_e = truncate_plan(new_e.repartition(nparts, "src"))
                 n_edges = new_e.count()
                 if owned_edges:
-                    e.unpersist()
+                    release_plan(e)
                 e, owned_edges = new_e, True
                 run._edges_live = e
                 ctx["n_edges"] = n_edges
@@ -351,7 +360,7 @@ def _pregel_loop(
         converged=converged or program.converged_at_cap,
     )
     if owned_edges:
-        e.unpersist()
+        release_plan(e)
     run._edges_live = None
     return result, run
 

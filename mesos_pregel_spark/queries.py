@@ -3870,6 +3870,8 @@ def q_ic_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.md5(F.col("id").cast("string")), F.col("id"))
         .limit(4).collect()
     ]
+    if not seeds:  # nothing survived percolation: no cascade, no rows
+        return spark.createDataFrame([], "lane long, hop long, n long")
     dists, _run = landmark_distances(
         spark, e, seeds, max_supersteps=_IC_DEPTH, edge_partitions=8
     )

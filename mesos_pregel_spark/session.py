@@ -42,9 +42,11 @@ def get_spark(
         # s/superstep vs sort-merge 6.0 vs forced-broadcast 8.6 — a
         # large state funneled through the driver every superstep is
         # the worst option, and re-sorting the static edge table every
-        # superstep (SMJ) is pure waste.  So: never prefer SMJ; leave
-        # the broadcast threshold at Spark's default so genuinely small
-        # states (the transcript actor-graph regime) still broadcast.
+        # superstep (SMJ) is pure waste.  So: never prefer SMJ.  The
+        # Pregel loop's scatter join does not depend on this or on the
+        # broadcast threshold: its truncated state carries no size
+        # estimate, is co-partitioned with the edges and is named the
+        # build side by a shuffle_hash hint (operators/scatter.py).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -32,10 +32,9 @@ def test_transcript_graph(spark):
     _compare(spark, ids_df, edges)
 
 
-def test_salting_and_broadcast_equivalence(spark):
+def test_salting_equivalence(spark):
     ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "two_islands"))
-    _compare(spark, ids_df, edges, n_salt=4, broadcast_threshold=0)
-    _compare(spark, ids_df, edges, broadcast_threshold=10**9)
+    _compare(spark, ids_df, edges, n_salt=4)
 
 
 def test_component_sizes_hand_case(spark):

@@ -86,3 +86,71 @@ def test_cc_resume_exact(spark, tmp_path):
     a = {r["id"]: r["component"] for r in straight.collect()}
     b = {r["id"]: r["component"] for r in resumed.collect()}
     assert a == b
+
+
+def test_crash_at_any_write_call_leaves_a_resumable_directory(
+    spark, tmp_path, monkeypatch
+):
+    """Re-checkpoint the newest step of a run from its own files, making
+    the k-th filesystem call of the write raise, for k = 1, 2, ... until
+    the write goes through.  After every failure the newest complete
+    manifest must name data that is there, and resuming from the
+    directory must give the straight run's answer."""
+    import builtins
+    import shutil
+
+    import pyarrow.parquet
+    from pyspark.sql import DataFrameWriter
+
+    import mesos_pregel_spark.plans.checkpoint as ckpt_mod
+
+    ids_df, _, _ = id_space(spark, micro_graph_df(spark, "k4"))
+    straight, _ = pagerank(spark, ids_df, tol=0.0, max_supersteps=6)
+    expected = _ranks(straight)
+    template = str(tmp_path / "template")
+    pagerank(spark, ids_df, tol=0.0, max_supersteps=3,
+             checkpoint_dir=template, checkpoint_every=1)
+
+    for k in range(1, 50):
+        ck = str(tmp_path / f"crash{k}")
+        shutil.copytree(template, ck)
+        mgr = CheckpointManager(spark, ck)
+        step, meta = mgr.latest()
+        calls = []
+
+        def failing(fn, path_arg=0):
+            def wrapped(*args, **kwargs):
+                if str(args[path_arg]).startswith(ck):
+                    calls.append(fn)
+                    if len(calls) == k:
+                        raise OSError(f"injected failure of call {k}")
+                return fn(*args, **kwargs)
+            return wrapped
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "parquet",
+                      failing(DataFrameWriter.parquet, path_arg=1))
+            m.setattr(os, "replace", failing(os.replace))
+            m.setattr(os, "remove", failing(os.remove))
+            m.setattr(shutil, "rmtree", failing(shutil.rmtree))
+            m.setattr(pyarrow.parquet, "read_metadata",
+                      failing(pyarrow.parquet.read_metadata))
+            m.setattr(ckpt_mod, "open", failing(builtins.open), raising=False)
+            try:
+                mgr.write(mgr.read(step), step, meta)
+                failed = False
+            except OSError:
+                failed = True
+
+        latest_step, _ = mgr.latest()
+        assert mgr.read(latest_step).count() == 4, (k, latest_step)
+        resumed, run = pagerank(spark, ids_df, tol=0.0, max_supersteps=6,
+                                checkpoint_dir=ck, checkpoint_every=1)
+        assert run.metrics[0]["superstep"] == latest_step + 1
+        got = _ranks(resumed)
+        assert set(got) == set(expected)
+        for v in expected:
+            assert math.isclose(got[v], expected[v], abs_tol=1e-6)
+        if not failed:
+            break
+    assert not failed and k > 3

@@ -323,3 +323,32 @@ def test_ic_spread_percolation_equivalence():
             exp.append((lane, hop, n))
     got = sorted(tuple(r) for r in con.execute(SQL_IC_SPREAD).fetchall())
     assert got == sorted(exp)
+
+
+def test_ic_spread_empty_percolation_gives_no_rows(spark, tmp_path):
+    """Every co-purchase edge fails its md5 coin: the cascade has no
+    seeds, and the engine returns an empty (lane, hop, n) frame where
+    the DuckDB twin returns zero rows."""
+    import hashlib
+
+    import duckdb
+
+    from mesos_pregel_spark.queries import SQL_IC_SPREAD, q_ic_spread
+
+    def u48(lo, hi):
+        h = hashlib.md5(f"ic42|{lo}|{hi}".encode()).hexdigest()[:12]
+        return int(h, 16) / 281474976710656.0
+
+    hi = next(k for k in range(2, 100) if u48(1, k) >= 0.5)
+    rows = [(100, 1), (100, hi)]
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    got = q_ic_spread(spark, str(tmp_path))
+    assert got.columns == ["lane", "hop", "n"]
+    assert got.collect() == []
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lineitem (l_orderkey BIGINT, l_partkey BIGINT)")
+    con.executemany("INSERT INTO lineitem VALUES (?, ?)", rows)
+    assert con.execute(SQL_IC_SPREAD).fetchall() == []

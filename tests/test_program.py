@@ -68,7 +68,6 @@ def _max_propagation_program():
         apply=apply,
         aggregators=[F.sum(F.col("changed").cast("long")).alias("active")],
         halt=lambda aggs: aggs["active"] == 0,
-        frontier_agg="active",
         finalize=lambda s: s.select("id", F.col("mx").alias("comp_max")),
     )
 
