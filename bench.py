@@ -19,7 +19,8 @@ Workloads (all seed-deterministic, no external data):
   edge_build  — X1–X6 over synthetic transcripts (~12M turns/sf-unit,
                 i.e. 1.2M at sf0.1 per FIXTURES.md §1 'bench')
   pagerank    — A1 on a zipf-skewed synthetic graph (~1M edges at
-                sf0.1, 100k vertices) — hub skew exercises S1/AQE
+                sf0.1, 100k vertices) — hub skew exercises the
+                combiner's map-side partial aggregate
   cc          — A2 to fixpoint on the same graph
   lpa         — A3, 5 bounded supersteps
   hits        — A6 hubs/authorities, 5 bounded supersteps (the

@@ -129,8 +129,6 @@ def neighborhood_sketches(
     seed: str = "anf42",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     extra_aggregators: list[Column] | None = None,
 ) -> tuple[DataFrame, PregelRun]:
@@ -200,7 +198,6 @@ def neighborhood_sketches(
         spark, edges, program,
         max_supersteps=h,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 
@@ -229,8 +226,6 @@ def centralities(
     seed: str = "anf42",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """HyperBall's actual read-outs (Boldi-Vigna): per-vertex HARMONIC
@@ -328,7 +323,6 @@ def centralities(
         spark, edges, program,
         max_supersteps=h,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 

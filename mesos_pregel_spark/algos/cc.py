@@ -93,8 +93,6 @@ def connected_components(
     max_supersteps: int = 200,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     prev_labels: DataFrame | None = None,
     delta_edges: DataFrame | None = None,
@@ -156,7 +154,6 @@ def connected_components(
         spark, edges, _cc_program("cc", init, apply),
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 

@@ -170,8 +170,6 @@ def speculative_coloring(
     spark: SparkSession,
     edges: DataFrame,
     max_supersteps: int = 30,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     mask_chunks: int = 1,
 ) -> tuple[DataFrame, PregelRun]:
@@ -302,7 +300,6 @@ def speculative_coloring(
     return pregel(
         spark, edges, program,
         max_supersteps=max_supersteps,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 
@@ -311,8 +308,6 @@ def jones_plassmann(
     spark: SparkSession,
     edges: DataFrame,
     max_supersteps: int = 50,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     mask_chunks: int = 1,
 ) -> tuple[DataFrame, PregelRun]:
@@ -384,7 +379,6 @@ def jones_plassmann(
     return pregel(
         spark, edges, program,
         max_supersteps=max_supersteps,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 
@@ -393,8 +387,6 @@ def greedy_coloring(
     spark: SparkSession,
     edges: DataFrame,
     max_supersteps: int = 50,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     variant: str = "auto",
     mask_chunks: int = 1,
@@ -429,7 +421,6 @@ def greedy_coloring(
             result, run = fn(
                 spark, edges,
                 max_supersteps=max_supersteps,
-                n_salt=n_salt, salt_hot_k=salt_hot_k,
                 edge_partitions=edge_partitions,
                 mask_chunks=k,
             )

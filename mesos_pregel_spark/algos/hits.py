@@ -52,8 +52,6 @@ def hits(
     max_supersteps: int = 20,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run HITS for ``max_supersteps`` (or to ``tol``).  Returns
@@ -155,6 +153,5 @@ def hits(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

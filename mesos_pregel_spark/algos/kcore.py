@@ -42,8 +42,6 @@ def k_core(
     max_supersteps: int = 50,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     prune_edges: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
@@ -113,7 +111,6 @@ def k_core(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 
@@ -190,8 +187,6 @@ def core_number(
     max_supersteps: int = 50,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Full k-core decomposition in ONE run: ``core(v)`` = the largest
@@ -287,7 +282,6 @@ def core_number(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 

@@ -92,8 +92,6 @@ def maximal_matching(
     spark: SparkSession,
     edges: DataFrame,
     max_rounds: int = 25,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     priority: str = "md5",
 ) -> tuple[DataFrame, PregelRun]:
@@ -190,6 +188,5 @@ def maximal_matching(
     return pregel(
         spark, edges, program,
         max_supersteps=2 * max_rounds,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -50,8 +50,6 @@ def maximal_independent_set(
     spark: SparkSession,
     edges: DataFrame,
     max_supersteps: int = 50,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Compute the greedy-by-md5-priority MIS.  Returns
@@ -113,6 +111,5 @@ def maximal_independent_set(
     return pregel(
         spark, edges, program,
         max_supersteps=max_supersteps,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -42,8 +42,6 @@ def multi_source_bfs(
     max_supersteps: int = 100,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Directed reachability masks from ``sources`` (≤ 63).  Returns
@@ -107,6 +105,5 @@ def multi_source_bfs(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -16,8 +16,8 @@ Expressed as a :class:`VertexProgram` on the generic superstep runner
 (plans/program.py): scatter join (edges pre-partitioned by src and
 persisted, the state hash-partitioned by id into the same partitions —
 no exchange on either side) → sum combiner (hash agg with map-side
-partials before the one message exchange by dst; optional explicit
-salting for hub skew) → damping expression.
+partials before the one message exchange by dst, which also bound a
+hub's share of it) → damping expression.
 """
 
 from __future__ import annotations
@@ -59,8 +59,6 @@ def pagerank(
     max_supersteps: int = 100,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
     weighted: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
@@ -80,7 +78,6 @@ def pagerank(
         pagerank_program(damping=damping, tol=tol, weighted=weighted),
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 

@@ -32,8 +32,6 @@ def personalized_pagerank(
     tol: float = 1e-6,
     max_supersteps: int = 100,
     edge_partitions: int | None = None,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
 ) -> tuple[DataFrame, PregelRun]:
     """Run PPR from ``sources``.  Returns (ranks(id, ppr), run)."""
     if not sources:
@@ -101,6 +99,5 @@ def personalized_pagerank(
     return pregel(
         spark, edges, program,
         max_supersteps=max_supersteps,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -47,8 +47,6 @@ def salsa(
     max_supersteps: int = 4,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run SALSA for ``max_supersteps`` Jacobi steps.  Returns
@@ -122,6 +120,5 @@ def salsa(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -35,8 +35,6 @@ def shortest_paths(
     max_supersteps: int = 200,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run SSSP from ``source``.  Returns (dists(id, distance), run)
@@ -94,6 +92,5 @@ def shortest_paths(
         spark, edges, program,
         max_supersteps=max_supersteps,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )

@@ -6,7 +6,7 @@ Subgraph in Streaming and MapReduce", VLDB 2012).
 
 These are the one-shot structural diagnostics a link-graph operator
 runs beside the iterative algorithms (SURVEY §2.2): LCC/assortativity
-characterize the graph before choosing salting/orientation strategies;
+characterize the graph before choosing hub caps/orientation strategies;
 link prediction is the standard common-neighbor recommender; densest
 subgraph is the classic spam-farm / community-core extractor.
 
@@ -747,8 +747,8 @@ def hill_alpha(deg: DataFrame, dmin: int = 2) -> DataFrame:
         alpha_hat = 1 + n_tail / sum_{d >= dmin} ln(d / dmin)
 
     This is the number that justifies the engine's skew machinery —
-    an alpha near 2 means the S1 salting hot-list and the hub caps
-    (A15/A27/A29) are load-bearing, not defensive.  Input is any
+    an alpha near 2 means the combiner's map-side partials and the hub
+    caps (A15/A27/A29) are load-bearing, not defensive.  Input is any
     DataFrame with a ``degree`` column (one row per vertex), e.g. the
     ``degree_histogram`` substrate before histogramming.
 

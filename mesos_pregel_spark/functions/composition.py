@@ -508,7 +508,7 @@ def textrank(
     src-partitioned persisted edges.  Vocabulary-scale vertices (~1e8
     at 100 TB with garbage types) are far below the kernel's tested
     edge cardinality; hub words (stopword survivors) are exactly the
-    skew the combiner's map-side partials + optional salting absorb.
+    skew the combiner's map-side partials absorb.
     Returns (token, textrank).
     """
     nt = F.size(F.col("toks"))

@@ -3,16 +3,14 @@
 Pregel combiners [P §3.2] reduce messages per destination *before*
 network transfer; Spark's HashAggregateExec does exactly this
 automatically (map-side partial aggregation) for commutative +
-associative aggregates — sum / min / max / count.
+associative aggregates — sum / min / max / bit_or / bit_and.
 
-S1 — explicit hub salting (BASELINE.json:6): transcript graphs are
-pathologically skewed (``role:assistant`` touches ~half of all edge
-endpoints).  Map-side partials already bound reducer fan-in to
-#map-partitions per key, but for *sort*-heavy aggregates and as an
-explicit, testable knob the engine supports a two-stage salted
-combine: stage 1 groups by (key, salt) where salt spreads a hot key
-over ``n_salt`` reducers, stage 2 merges the per-salt partials.
-Equivalence (salting on/off) is a pinned invariant test (FIXTURES §4).
+S1 — hub skew: transcript graphs are pathologically skewed
+(``role:assistant`` touches ~half of all edge endpoints).  The map-side
+partial aggregate bounds a hub destination to one row per map partition
+in the exchange by ``dst``, so the combine needs no salting stage;
+``tests/test_superstep_plan.py`` pins the partial aggregate below that
+exchange.
 """
 
 from __future__ import annotations
@@ -23,10 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Aggregates that are commutative+associative and therefore legal as
-# Pregel combiners (two-stage-safe: agg(agg(x)) == agg(x)).  bit_or /
-# bit_and serve bit-packed states (multi-source BFS reachability
-# masks); count is deliberately absent — count∘count ≠ count, so it is
-# NOT mergeable (send 1s and sum instead).
+# Pregel combiners (partial-aggregate-safe: agg(agg(x)) == agg(x)).
+# bit_or / bit_and serve bit-packed states (multi-source BFS
+# reachability masks); count is deliberately absent — count∘count ≠
+# count, so it is NOT mergeable (send 1s and sum instead).
 _MERGEABLE = {"sum", "min", "max", "bit_or", "bit_and"}
 
 
@@ -34,65 +32,15 @@ def combine(
     messages: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
-    n_salt: int = 0,
-    salt_on: str | None = None,
-    hot_keys: Sequence | None = None,
 ) -> DataFrame:
     """Combine messages per destination key(s).
 
-    ``aggs`` maps output column name → (input column, fn) with fn in
-    {sum, min, max}.  With ``n_salt > 0`` the combine runs two-stage:
-    group by (keys, salt) then by keys, where salt is derived from
-    ``salt_on`` (typically the message's src — uniform over a hub's
-    senders) or a random-free per-row hash of all key columns.
-
-    ``hot_keys`` (SURVEY S1): when given, ONLY those destination keys
-    get salted (salt=0 elsewhere) — the driver computes the top-k
-    in-degree hubs once and the second-stage aggregation touches just
-    the few hot groups instead of every key.  The list is small by
-    construction (top-k), so it ships as a literal IN predicate.
+    ``aggs`` maps output column name → (input column, fn) with fn one
+    of the mergeable aggregates above.
     """
     for out, (col, fn) in aggs.items():
         if fn not in _MERGEABLE:
             raise ValueError(f"{fn} is not a valid Pregel combiner (not mergeable)")
-
-    def agg_exprs(df_cols_suffix: str = ""):
-        return [
-            getattr(F, fn)(col + df_cols_suffix).alias(out)
-            for out, (col, fn) in aggs.items()
-        ]
-
-    if n_salt <= 0:
-        return messages.groupBy(*keys).agg(*agg_exprs())
-
-    salt_src = F.col(salt_on) if salt_on else F.concat_ws("\x00", *keys)
-    salt_expr = F.pmod(F.xxhash64(salt_src), F.lit(n_salt))
-    if hot_keys is not None:
-        salt_expr = F.when(
-            F.col(keys[0]).isin(list(hot_keys)), salt_expr
-        ).otherwise(F.lit(0))
-    salted = messages.withColumn("_salt", salt_expr)
-    stage1 = salted.groupBy(*keys, "_salt").agg(
+    return messages.groupBy(*keys).agg(
         *[getattr(F, fn)(col).alias(out) for out, (col, fn) in aggs.items()]
     )
-    # Stage 2 merges partials with the same fn (all fns here are
-    # idempotent under re-aggregation: sum∘sum, min∘min, max∘max).
-    return stage1.groupBy(*keys).agg(
-        *[getattr(F, fn)(out).alias(out) for out, (_c, fn) in aggs.items()]
-    )
-
-
-def hot_destinations(edges: DataFrame, top_k: int = 64) -> list:
-    """The top-k destinations by in-edge count — the hub hot-list the
-    driver computes ONCE (per graph, not per superstep) and feeds to
-    ``combine(hot_keys=...)``.  Transcript graphs concentrate ~half of
-    all endpoints on a few actors (role:assistant/user), so k stays
-    tiny."""
-    dst = edges.columns[1]
-    rows = (
-        edges.groupBy(dst).agg(F.count(F.lit(1)).alias("indeg"))
-        .orderBy(F.desc("indeg"), F.asc(dst))
-        .limit(top_k)
-        .collect()
-    )
-    return [r[dst] for r in rows]

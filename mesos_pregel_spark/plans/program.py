@@ -27,8 +27,10 @@ partitions for the whole run so that a superstep's only shuffle is the
 message exchange by ``dst`` [P §4.1], map-side partial aggregation of
 messages before that exchange (Pregel's combiners [P §3.2]), hard
 lineage truncation per superstep (S3), checkpoint/resume (P8) and
-per-superstep metrics (S4).  Hub-salted two-stage combines (S1) are
-available through ``n_salt``/``salt_hot_k`` but off by default.  The
+per-superstep metrics (S4).  The map-side partial aggregate is also the
+engine's answer to hub skew: a hub destination costs at most one row
+per map partition in the exchange, so there is no salting stage and
+the loop runs one plan at every scale (AQE is off inside it).  The
 built-in iterative algorithms (algos/pagerank.py, cc.py, lpa.py, sssp.py,
 kcore.py, msbfs.py, harmonic.py, betweenness.py, among others) are
 thin wrappers constructing a VertexProgram — a user's custom
@@ -45,7 +47,6 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.operators.combine import combine
@@ -127,8 +128,6 @@ def pregel(
     max_supersteps: int = 100,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
     edge_partitions: int | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Run ``program`` to its halt condition (or the superstep cap).
@@ -139,9 +138,10 @@ def pregel(
     across jobs); any other value repartitions by ``src`` and persists
     here.  Either way the vertex state is hash-partitioned by ``id``
     into the edge table's partition count, and the run pins
-    ``spark.sql.shuffle.partitions`` to that count, so the scatter
-    join and apply's join need no exchange and only the messages
-    shuffle.
+    ``spark.sql.shuffle.partitions`` to that count and turns AQE off,
+    so the scatter join and apply's join need no exchange and only the
+    messages shuffle.  The caller's two settings are restored on return
+    and on error.
     """
     # converged_at_cap programs (sync-LPA, peeling) treat the superstep
     # cap as part of their SEMANTICS — a capped run is a final answer
@@ -162,27 +162,12 @@ def pregel(
     if run.resumed_final:
         return resumed, run
 
-    # AQE policy for the superstep loop — regime-dependent, A/B-measured:
-    #
-    # * SMALL graphs (latency-bound loop): AQE's per-job re-planning
-    #   dominates — 31.7s AQE-on vs 11.5s AQE-off at 1M edges /
-    #   18 supersteps.  Its re-coalescing also re-plans each
-    #   superstep's tiny stages against the FIXED Pregel partitioner
-    #   [P §4.1].  → disable.
-    # * LARGE graphs (throughput-bound shuffles): AQE's coalescing and
-    #   local shuffle readers pay for themselves — 9.5M edges/s
-    #   AQE-off vs 33.7M AQE-on at 512M edges on this box.  → keep.
-    #
-    # The loop picks by edge count at AQE_EDGE_THRESHOLD (crossover
-    # measured between those two points; see BENCH notes).
-    # Skew remains handled by explicit salting (S1) in both regimes.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         return _pregel_loop(
             spark, edges, program, run, resumed,
             max_supersteps=max_supersteps,
-            n_salt=n_salt, salt_hot_k=salt_hot_k,
             edge_partitions=edge_partitions,
         )
     except BaseException:
@@ -196,15 +181,6 @@ def pregel(
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
 
 
-# Loop-AQE auto crossover: below this edge count the superstep loop is
-# latency-bound and AQE planning overhead loses; above, shuffle
-# throughput dominates and AQE's coalescing/local-readers win.
-# Calibrated warm at local[8], 4 supersteps, hub regime (edges : off vs
-# on, sec): 1M 11.5/14.3 · 4M 3.8/3.9 · 16M 10.5/6.7 · 64M 18.5/8.0 ·
-# 512M 9.5M vs 33.7M edges/s.  Crossover sits between 4M and 16M.
-AQE_EDGE_THRESHOLD = 8_000_000
-
-
 def _pregel_loop(
     spark: SparkSession,
     edges: DataFrame,
@@ -212,8 +188,6 @@ def _pregel_loop(
     run: PregelRun,
     resumed: DataFrame | None,
     max_supersteps: int,
-    n_salt: int,
-    salt_hot_k: int,
     edge_partitions: int | None,
 ) -> tuple[DataFrame, PregelRun]:
 
@@ -268,15 +242,14 @@ def _pregel_loop(
         n_edges = e.count()
         run._edges_live = e
 
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        "true" if n_edges > AQE_EDGE_THRESHOLD else "false",
-    )
     # Pregel's fixed partitioning [P §4.1]: the state is hash-
     # partitioned by id into the edge table's nparts partitions for the
     # whole run, and the message combine shuffles into the same nparts,
     # so the scatter join and apply's join need no exchange: a
-    # superstep's only shuffle is the message exchange by dst.
+    # superstep's only shuffle is the message exchange by dst.  AQE is
+    # off because it would re-plan this partitioning away (a state
+    # exchange, a broadcast of the messages, coalesced shuffle reads).
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
     run.partitions = nparts
 
@@ -296,23 +269,12 @@ def _pregel_loop(
             program.init(e, ctx).repartition(nparts, "id"), durable=False
         )
 
-    hot = None
-    if n_salt > 0 and salt_hot_k > 0:
-        from mesos_pregel_spark.operators.combine import hot_destinations
-        hot = hot_destinations(e, salt_hot_k)
-
     converged = False
     while run.superstep < max_supersteps:
         msgs = scatter(
-            e,
-            state,
-            [*program.msg_cols, F.col("src").alias("msrc")],
-            active_filter=program.active_filter,
+            e, state, program.msg_cols, active_filter=program.active_filter
         )
-        combined = combine(
-            msgs, list(program.combine_keys), program.combiner,
-            n_salt=n_salt, salt_on="msrc", hot_keys=hot,
-        )
+        combined = combine(msgs, list(program.combine_keys), program.combiner)
         if program.post_combine is not None:
             combined = program.post_combine(combined)
 

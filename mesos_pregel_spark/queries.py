@@ -3255,7 +3255,7 @@ FROM e GROUP BY dst
 def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-degree distribution of the bipartite link graph — the
     first diagnostic a link-graph operator runs (skew/power-law check;
-    it is what sizes the S1 salting hot-list).  Two hash aggregations,
+    it shows how heavy the hub head is).  Two hash aggregations,
     integer columns only; map-side partials bound each stage's output
     by the distinct-degree count regardless of |E|."""
     e = q_bipartite_edges(spark, sf_dir)
@@ -3280,8 +3280,7 @@ _HILL_DMIN = 2
 def q_hill_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill MLE power-law exponent of the same out-degree
     distribution degree_histogram reports — the one-number skew
-    diagnostic that sizes the S1 salting hot-list (alpha near 2 =
-    heavy head, salting load-bearing)."""
+    diagnostic (alpha near 2 = heavy head, hub caps load-bearing)."""
     from mesos_pregel_spark.algos.structure import hill_alpha
 
     e = q_bipartite_edges(spark, sf_dir)
@@ -7121,9 +7120,8 @@ def q_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of the parts-graph degree distribution — the
     inequality read-out beside hill_alpha's tail exponent and
     molloy_reed's kappa (Gini ≈ 0 = egalitarian wiring, → 1 = a few
-    hubs own the edges; the skew number that decides whether salting
-    is worth it before a run).  Computed from the DEGREE HISTOGRAM,
-    never a global sort: Gini = Σ_{a,b} h_a·h_b·|a−b| / (2·n·Σdeg)
+    hubs own the edges; the skew number read before a run).  Computed
+    from the DEGREE HISTOGRAM, never a global sort: Gini = Σ_{a,b} h_a·h_b·|a−b| / (2·n·Σdeg)
     over distinct degree VALUES — the histogram self-join is bounded
     by (#distinct degrees)², calendar-small however big the graph;
     products widened to decimal(38,0)/HUGEINT, ONE rounded division."""

@@ -1,9 +1,10 @@
 """SparkSession factory with the engine's pinned config baseline.
 
-SURVEY.md §4.4: AQE on (skew-join backstop to explicit salting),
-Arrow-enabled pandas UDFs, shuffle partitions sized to cores.  All
-engine behavior is pure DataFrame-API + driver-level control, so the
-whole engine ships as ``spark-submit --py-files`` with no custom jars.
+SURVEY.md §4.4: AQE on for one-shot queries (the Pregel loop turns it
+off for its own run, see plans/program.py::pregel), Arrow-enabled
+pandas UDFs, shuffle partitions sized to cores.  All engine behavior
+is pure DataFrame-API + driver-level control, so the whole engine
+ships as ``spark-submit --py-files`` with no custom jars.
 """
 
 from __future__ import annotations

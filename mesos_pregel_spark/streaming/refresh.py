@@ -20,7 +20,8 @@ changes cost, not the answer.
 Scale shape: the warm init is ONE left join of the fresh vertex set
 against the previous rank table (both id-keyed), then the standard
 superstep loop; nothing else changes, so all engine machinery
-(salting, lineage truncation, checkpointing) applies unchanged.
+(fixed partitioning, lineage truncation, checkpointing) applies
+unchanged.
 """
 
 from __future__ import annotations
@@ -42,8 +43,6 @@ def warm_pagerank(
     tol: float = 1e-6,
     max_supersteps: int = 100,
     edge_partitions: int | None = None,
-    n_salt: int = 0,
-    salt_hot_k: int = 0,
 ) -> tuple[DataFrame, PregelRun]:
     """PageRank on ``edges`` initialized from ``prev_ranks``
     (id, pagerank) where available; vertices new since the previous run
@@ -67,7 +66,6 @@ def warm_pagerank(
     return pregel(
         spark, edges, program,
         max_supersteps=max_supersteps,
-        n_salt=n_salt, salt_hot_k=salt_hot_k,
         edge_partitions=edge_partitions,
     )
 

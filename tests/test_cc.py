@@ -32,11 +32,6 @@ def test_transcript_graph(spark):
     _compare(spark, ids_df, edges)
 
 
-def test_salting_equivalence(spark):
-    ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "two_islands"))
-    _compare(spark, ids_df, edges, n_salt=4)
-
-
 def test_component_sizes_hand_case(spark):
     from mesos_pregel_spark.algos.cc import component_sizes
 

@@ -38,8 +38,3 @@ def test_transcript_graph_weighted(spark):
     ids_df = edges_with_ids(build_edges(t))
     edges = [(r["src"], r["dst"], r["weight"]) for r in ids_df.collect()]
     _compare(spark, ids_df, edges)
-
-
-def test_salting_equivalence(spark):
-    ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "star_hub"))
-    _compare(spark, ids_df, edges, n_salt=4)

@@ -42,12 +42,6 @@ def test_convergence_on_transcript_graph(spark):
     assert run.metrics[-1]["max_delta"] < 1e-6
 
 
-def test_salting_equivalence(spark):
-    """FIXTURES §4.3 — salting on/off produces the same result."""
-    ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "star_hub"))
-    _run_and_compare(spark, ids_df, edges, tol=0.0, max_supersteps=6, n_salt=4)
-
-
 def test_partition_invariance(spark):
     """FIXTURES §4.2 — identical results at different partition counts."""
     ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "k4"))
@@ -55,14 +49,6 @@ def test_partition_invariance(spark):
                      edge_partitions=2)
     _run_and_compare(spark, ids_df, edges, tol=0.0, max_supersteps=6,
                      edge_partitions=16)
-
-
-def test_hot_key_salting_equivalence(spark):
-    """S1 hot-list: salting only the top-k hub destinations produces
-    identical results to unsalted / fully-salted combines."""
-    ids_df, edges, _ = id_space(spark, micro_graph_df(spark, "star_hub"))
-    _run_and_compare(spark, ids_df, edges, tol=0.0, max_supersteps=6,
-                     n_salt=4, salt_hot_k=2)
 
 
 def test_weighted_matches_oracle(spark):

@@ -162,6 +162,68 @@ def test_prepare_edges_feeds_the_fast_path(spark):
            {tuple(r) for r in fast.collect()}
 
 
+_CONF_KEYS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+@pytest.fixture
+def conf_probe(spark):
+    """A caller session with AQE on and 8 shuffle partitions, a
+    3-partition prepared edge table, and a max-propagation program
+    whose ``apply`` records the two settings it runs under.  The
+    session's own values come back afterwards."""
+    from mesos_pregel_spark.plans.program import prepare_edges
+
+    saved = [spark.conf.get(k) for k in _CONF_KEYS]
+    spark.conf.set(_CONF_KEYS[0], "true")
+    spark.conf.set(_CONF_KEYS[1], "8")
+    ids_df, _edges, _names = id_space(spark, micro_graph_df(spark, "two_islands"))
+    prepped = prepare_edges(spark, ids_df, _max_propagation_program(),
+                            edge_partitions=3)
+    seen = []
+    program = _max_propagation_program()
+    apply = program.apply
+
+    def reading_apply(state, combined, ctx):
+        seen.append(tuple(spark.conf.get(k) for k in _CONF_KEYS))
+        return apply(state, combined, ctx)
+
+    program.apply = reading_apply
+    try:
+        yield prepped, program, seen
+    finally:
+        prepped.unpersist()
+        for k, v in zip(_CONF_KEYS, saved):
+            spark.conf.set(k, v)
+
+
+def test_loop_pins_its_conf_and_restores_the_callers(spark, conf_probe):
+    """Inside the superstep loop AQE is off and the shuffle partitions
+    equal the edge table's partition count (one plan at every scale);
+    the caller's two values come back after the run."""
+    prepped, program, seen = conf_probe
+    pregel(spark, prepped, program, edge_partitions=0)
+    n = str(prepped.rdd.getNumPartitions())
+    assert n == "3"
+    assert seen and set(seen) == {("false", n)}
+    assert [spark.conf.get(k) for k in _CONF_KEYS] == ["true", "8"]
+
+
+def test_loop_restores_the_callers_conf_when_halt_raises(spark, conf_probe):
+    """A run whose ``halt`` raises still hands the caller back AQE on
+    and 8 shuffle partitions, after running its superstep under the
+    loop's pinned values."""
+    prepped, program, seen = conf_probe
+
+    def failing_halt(aggs):
+        raise RuntimeError("halt failed")
+
+    program.halt = failing_halt
+    with pytest.raises(RuntimeError, match="halt failed"):
+        pregel(spark, prepped, program, edge_partitions=0)
+    assert seen == [("false", "3")]
+    assert [spark.conf.get(k) for k in _CONF_KEYS] == ["true", "8"]
+
+
 _BUILT_INS = {
     "pagerank": lambda spark, e: pagerank(spark, e),
     "pagerank_weighted": lambda spark, e: pagerank(spark, e, weighted=True),

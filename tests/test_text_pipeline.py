@@ -485,6 +485,33 @@ def test_fertility_closed_forms(spark):
     assert r2["fertility"] == 1.0
 
 
+
+def test_fertility_non_bmp_subwords_match_the_oracle(spark):
+    """Non-BMP characters (an emoji, a supplementary CJK ideograph)
+    count as ONE subword each in Spark, as in the DuckDB oracle: Java's
+    regex character classes match code points, not UTF-16 units."""
+    import duckdb
+
+    from mesos_pregel_spark.functions.text import fertility_stats
+    from mesos_pregel_spark.queries_text import SQL_FERTILITY
+
+    text = "ab \U0001F600 c\U00020000d"
+    docs = spark.createDataFrame(
+        [(1, text, "en", "s", len(text))],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    got = [tuple(r) for r in fertility_stats(docs).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id BIGINT, text TEXT, lang TEXT, "
+        "source TEXT, n_chars BIGINT)"
+    )
+    con.execute("INSERT INTO documents VALUES (1, ?, 'en', 's', ?)",
+                [text, len(text)])
+    assert got == con.execute(SQL_FERTILITY).fetchall()
+    # ab | 😀 | c | 𠀀 | d
+    assert got[0][4] == 5
+
 def test_vocab_coverage_monotone_and_exact():
     """Coverage ladder on the twin: hand corpus where the top-10 rung
     is computable by hand; rungs are monotone and k=1000 covers all."""

@@ -120,3 +120,45 @@ def test_lexical_pairs_exact_integer_scores():
     assert rows[0][:2] == (1, 2)  # dominant pair ranks first
     # the df-61 stopword never forms a pair on its own
     assert all(n <= 3 for (_a, _b), (n, _s) in got.items())
+
+
+def test_lexical_pairs_overflow_raises_in_both_engines(spark):
+    """Two docs repeating one term: at 3,000 repeats the pair score
+    (3e9 micro-units squared = 9e18) still fits a BIGINT and both
+    engines agree; at 3,100 the product passes 2^63 and both raise
+    (Spark under its default ANSI mode, DuckDB always) instead of
+    wrapping."""
+    import duckdb
+    import pytest
+    from pyspark.errors import ArithmeticException
+
+    from mesos_pregel_spark.functions.text import lexical_pairs
+    from mesos_pregel_spark.queries_text import SQL_LEXICAL_PAIRS
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents (doc_id BIGINT, text TEXT, lang TEXT, "
+        "source TEXT, n_chars BIGINT)"
+    )
+
+    def corpus(reps):
+        text = " ".join(["w"] * reps)
+        con.execute("DELETE FROM documents")
+        con.execute("INSERT INTO documents VALUES (1, ?, 'en', 's', 1), "
+                    "(2, ?, 'en', 's', 1)", [text, text])
+        return spark.createDataFrame(
+            [(1, text, "en", "s", 1), (2, text, "en", "s", 1)],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        )
+
+    docs = corpus(3_000)
+    got = [tuple(r) for r in lexical_pairs(docs).collect()]
+    assert got == con.execute(SQL_LEXICAL_PAIRS).fetchall()
+    assert got == [(1, 2, 1, 9 * 10**18)]
+
+    docs = corpus(3_100)
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        lexical_pairs(docs).collect()
+    with pytest.raises(duckdb.OutOfRangeException, match="Overflow"):
+        con.execute(SQL_LEXICAL_PAIRS).fetchall()
