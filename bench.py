@@ -51,7 +51,8 @@ Workloads (all seed-deterministic, no external data):
                 measures the per-step window-sort overhead)
   warm_cc     — warm-start CC: 1k-edge delta on the cc-labeled graph;
                 supersteps/wall vs the cold cc row (incremental
-                maintenance economics, streaming/refresh.py)
+                maintenance economics, connected_components'
+                prev_labels/delta_edges)
   coloring    — speculative coloring (parallel tentative bids,
                 per-(dst,tent) min + bit_or combiner shuffle; the
                 scale path — JP is priority-DAG-depth bound)
@@ -397,7 +398,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         detail["cc_supersteps"] = len(run_cc.metrics)
 
     if on("warm_cc"):
-        # Incremental-maintenance economics (streaming/refresh.py): a
+        # Incremental-maintenance economics (warm-started CC): a
         # tiny deterministic delta lands on the already-labeled graph;
         # warm CC re-propagates only through the delta frontier and the
         # quotient of old components, so its supersteps/wall should be
@@ -406,10 +407,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         # filtered out); both label-materialize and delta-build are
         # untimed, like graph load.
         from pyspark.sql import functions as F
-
-        from mesos_pregel_spark.streaming.refresh import (
-            warm_connected_components,
-        )
 
         if comps_cc is None:
             comps_cc, _ = connected_components(spark, g, edge_partitions=nparts)
@@ -422,7 +419,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         ).where(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
         full = g.select("src", "dst", "weight").unionByName(delta)
         t = time.monotonic()
-        wcomps, run_warm = warm_connected_components(
+        wcomps, run_warm = connected_components(
             spark, full, prev_labels=prev, delta_edges=delta,
             edge_partitions=nparts,
         )
@@ -1401,7 +1398,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         # batch — the cold kernel AND the streaming warm path at
         # bench scale.
         from mesos_pregel_spark.algos.temporal import temporal_reach
-        from mesos_pregel_spark.streaming.refresh import warm_temporal_reach
 
         tre = g.select(
             "src", "dst",
@@ -1429,9 +1425,11 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
              % F.lit(1_000_000_000)).alias("t"),
         )
         t = time.monotonic()
-        warm, _ = warm_temporal_reach(
-            spark, tre.unionByName(delta), seed0, reach,
-            delta_transitions=delta, prev_converged=at_fixpoint,
+        # the delta-frontier shrink is sound only from a converged
+        # previous run; from a capped one every reached vertex re-sends
+        warm, _ = temporal_reach(
+            spark, tre.unionByName(delta), seed0, prev_arrivals=reach,
+            delta_transitions=delta if at_fixpoint else None,
             max_supersteps=12, edge_partitions=nparts,
         )
         n_warm = warm.where(F.col("arrival_us").isNotNull()).count()

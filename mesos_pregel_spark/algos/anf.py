@@ -1,7 +1,7 @@
 """A9 — Approximate Neighborhood Function (ANF / HyperBall family):
 per-vertex estimates of |B_h(v)| — how many vertices are within h hops
 — via Flajolet-Martin bitmask sketches riding the engine's ``bit_or``
-combiner, plus the effective-diameter read-out.
+combiner.
 
 The web-graph classic (Palmer-Gibbons-Faloutsos ANF; Boldi-Vigna
 HyperBall runs the same iteration with HyperLogLog registers): the
@@ -130,7 +130,6 @@ def neighborhood_sketches(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
     edge_partitions: int | None = None,
-    extra_aggregators: list[Column] | None = None,
 ) -> tuple[DataFrame, PregelRun]:
     """Radius-``h`` FM sketches of every vertex's out-neighborhood:
     returns (sketches(id, r0..r{k-1}), run).  Feed the result to
@@ -185,10 +184,7 @@ def neighborhood_sketches(
         active_filter=F.col("changed"),
         combiner={f"c{j}": (f"m{j}", "bit_or") for j in range(k)},
         apply=apply,
-        aggregators=[
-            F.sum(F.col("changed").cast("long")).alias("active"),
-            *(extra_aggregators or []),
-        ],
+        aggregators=[F.sum(F.col("changed").cast("long")).alias("active")],
         halt=lambda aggs: aggs["active"] == 0,
         finalize=lambda s: s.select("id", *regs),
         converged_at_cap=True,  # an h-capped run IS the radius-h answer
@@ -325,33 +321,3 @@ def centralities(
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         edge_partitions=edge_partitions,
     )
-
-
-def effective_diameter(
-    spark: SparkSession,
-    edges: DataFrame,
-    q: float = 0.9,
-    max_h: int = 32,
-    k: int = 8,
-    seed: str = "anf42",
-    **kwargs,
-) -> tuple[int, list[float], PregelRun]:
-    """Smallest h with N(h) ≥ q · N(max_h), where N(h) = Σ_v est
-    |B_h(v)| — the standard ANF effective-diameter read-out.  Returns
-    (h_eff, [N(1)..N(h_stop)], run); the sketch loop stops early once
-    no register changes (N has reached the transitive-closure
-    plateau).  Driver-side work is one tiny aggregator per round; the
-    per-round N(h) values ride the run's existing aggregator channel,
-    so this costs exactly one sketch run."""
-    regs = [f"r{j}" for j in range(k)]
-    _sketches, run = neighborhood_sketches(
-        spark, edges, h=max_h, k=k, seed=seed,
-        extra_aggregators=[F.sum(fm_estimate(regs)).alias("nf_sum")],
-        **kwargs,
-    )
-    ns = [m["nf_sum"] for m in run.metrics if "nf_sum" in m]
-    target = q * ns[-1]
-    for i, n in enumerate(ns):
-        if n >= target:
-            return i + 1, ns, run
-    return len(ns), ns, run

@@ -111,7 +111,8 @@ def connected_components(
     old components are label-uniform, so any new minimum entering a
     component does so through a delta endpoint, floods it, and each
     relaxation reactivates its vertex — the classic delta-frontier
-    argument (pytest-pinned warm ≡ cold in tests/test_warm_cc.py).
+    argument (pytest-pinned warm ≡ cold in tests/test_warm_cc.py; run
+    at bench scale by bench.py's ``warm_cc`` workload).
     NOT valid under deletions (components can split); run cold.
     """
 

@@ -100,29 +100,13 @@ def dag_levels(
     dag_edges: DataFrame,
     max_supersteps: int = 60,
     edge_partitions: int | None = None,
-    prev_levels: DataFrame | None = None,
-    delta_edges: DataFrame | None = None,
 ) -> tuple[DataFrame, PregelRun | None]:
     """Longest-path levels over an edge table the CALLER guarantees is
     acyclic (e.g. edges oriented low→high key): skips the SCC
     contraction — every vertex is its own level-0-seeded component —
     and runs only the capped max-propagation loop.  Same
     (comp, n_vertices, level) output as condensation_levels, with
-    n_vertices = 1 throughout.
-
-    Warm start (additions-only): ``prev_levels`` (comp, level) from a
-    CONVERGED earlier run on an edge SUBSET seeds the state (new
-    vertices at 0); levels are monotone under additions, so the warm
-    fixpoint is EXACTLY the cold run's.  ``delta_edges`` (the edges
-    new since the previous run) shrinks the initial frontier to the
-    delta's SOURCE vertices — every rise originates at a new edge's
-    head, so only those need to re-send; without it every vertex
-    re-sends once (one full round, still exact).  Only sound when the
-    previous run HALTED before its cap (a capped prev holds
-    min(level, k), whose interrupted propagation a delta frontier
-    would not resume) — warm-starting condensation output is
-    deliberately unsupported, since SCC identities shift under
-    additions."""
+    n_vertices = 1 throughout."""
     cedges = dag_edges.select("src", "dst").distinct()
     comps = (
         cedges.select(F.col("src").alias("comp"))
@@ -133,7 +117,6 @@ def dag_levels(
     return _levels_over(
         spark, comps, cedges,
         max_supersteps=max_supersteps, edge_partitions=edge_partitions,
-        prev_levels=prev_levels, delta_edges=delta_edges,
     )
 
 
@@ -204,8 +187,6 @@ def _levels_over(
     cedges: DataFrame,
     max_supersteps: int,
     edge_partitions: int | None,
-    prev_levels: DataFrame | None = None,
-    delta_edges: DataFrame | None = None,
 ) -> tuple[DataFrame, PregelRun | None]:
     # the level loop seeds from the FULL component set (closure), so
     # isolated components appear at level 0 even though they have no
@@ -216,31 +197,10 @@ def _levels_over(
         ), None
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
-        ids = comps.select(F.col("comp").alias("id"))
-        if prev_levels is None:
-            return ids.select(
-                "id",
-                F.lit(0).cast("long").alias("lvl"),
-                F.lit(True).alias("fresh"),
-            )
-        warm = ids.join(
-            prev_levels.select(
-                F.col("comp").alias("id"),
-                F.col("level").cast("long").alias("warm_lvl"),
-            ),
-            "id", "left_outer",
-        ).select(
-            "id", F.coalesce("warm_lvl", F.lit(0)).cast("long").alias("lvl")
-        )
-        if delta_edges is None:
-            # no delta info: every vertex re-sends its level once
-            return warm.select("id", "lvl", F.lit(True).alias("fresh"))
-        senders = delta_edges.select(
-            F.col("src").alias("id"), F.lit(True).alias("is_src")
-        ).distinct()
-        return warm.join(senders, "id", "left_outer").select(
-            "id", "lvl",
-            F.coalesce("is_src", F.lit(False)).alias("fresh"),
+        return comps.select(
+            F.col("comp").alias("id"),
+            F.lit(0).cast("long").alias("lvl"),
+            F.lit(True).alias("fresh"),
         )
 
     def apply(state: DataFrame, combined: DataFrame, ctx: dict) -> DataFrame:

@@ -45,7 +45,7 @@ from mesos_pregel_spark.plans.pregel import PregelRun
 
 def keyed_triangles(tri: DataFrame) -> DataFrame:
     """(a,b,c) triangles -> their three edge keys + the star center
-    (the LEAST key).  Shared by the cold build and the warm refresh."""
+    (the LEAST key)."""
     ekey = lambda x, y: F.concat_ws("|", F.col(x), F.col(y))  # noqa: E731
     return tri.select(
         ekey("a", "b").alias("ea"),

@@ -38,29 +38,13 @@ def label_propagation(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
     edge_partitions: int | None = None,
-    prev_labels: DataFrame | None = None,
 ) -> tuple[DataFrame, PregelRun]:
-    """Run sync-LPA.  Returns (labels(id, label), run).
-
-    ``prev_labels`` (id, label) WARM-STARTS the run from an earlier
-    snapshot's communities (streaming/refresh.py::warm_lpa): vertices
-    present in it start at their previous label, new vertices at their
-    id.  The transition rule is unchanged, so if the previous labels
-    are still a fixpoint of the refreshed graph the run halts after
-    ONE superstep (changed_count == 0) with identical labels; when the
-    delta perturbs communities, propagation restarts from the old
-    communities instead of from singletons."""
+    """Run sync-LPA.  Returns (labels(id, label), run)."""
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
-        verts = (
+        return (
             e.select(F.col("src").alias("id")).distinct()
             .select("id", F.col("id").alias("label"))
-        )
-        if prev_labels is None:
-            return verts
-        prev = prev_labels.select("id", F.col("label").alias("warm_label"))
-        return verts.join(prev, "id", "left_outer").select(
-            "id", F.coalesce("warm_label", F.col("label")).alias("label")
         )
 
     def argmax(per_label: DataFrame) -> DataFrame:

@@ -52,7 +52,7 @@ from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.algos.triangles import canonical_undirected, triangle_count
 from mesos_pregel_spark.plans.pregel import PregelRun
-from mesos_pregel_spark.plans.truncate import truncate_plan
+from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
 
 
 def _und_degrees(und: DataFrame) -> DataFrame:
@@ -422,78 +422,94 @@ def densest_subgraph(
 
     removed_batches: list[DataFrame] = []  # (id, round) — append-only
     cur = und
-    # Explicit survivor VERTEX set: a survivor isolated by its
-    # neighbors' removal has deg 0, satisfies the cut trivially, and
-    # is removed (and recorded) the next round — without this, its
-    # disappearance from the edge endpoints would leave a hole in the
-    # removal log and corrupt best-round membership recovery.
-    verts = truncate_plan(_und_degrees(und).select("id"))
-    stats: list[tuple[int, int, int]] = []  # (round, |S|, |E|)
-    for t in range(max_rounds):
-        n_verts = verts.count()
-        if n_verts == 0:
-            break
-        n_edges = cur.count()
-        stats.append((t, n_verts, n_edges))
-        run.record(round=t, vertices=n_verts, edges=n_edges)
-        deg = verts.join(_und_degrees(cur), "id", "left_outer").select(
-            "id", F.coalesce("deg", F.lit(0)).alias("deg")
-        )
-        # integer cut: deg * |S| <= 3 * |E|  (eps = 1/2)
-        out_now = truncate_plan(
-            deg.where(
-                F.col("deg") * F.lit(n_verts) <= F.lit(3) * F.lit(n_edges)
-            ).select("id", F.lit(t).alias("removed_round"))
-        )
-        removed_batches.append(out_now)
-        verts = truncate_plan(
-            verts.join(out_now, "id", "left_anti").select("id")
-        )
-        cur = truncate_plan(
-            cur.join(out_now.select(F.col("id").alias("lo")), "lo", "left_anti")
-            .join(out_now.select(F.col("id").alias("hi")), "hi", "left_anti")
-            .select("lo", "hi")
-        )
+    verts = None
+    try:
+        # Explicit survivor VERTEX set: a survivor isolated by its
+        # neighbors' removal has deg 0, satisfies the cut trivially, and
+        # is removed (and recorded) the next round — without this, its
+        # disappearance from the edge endpoints would leave a hole in
+        # the removal log and corrupt best-round membership recovery.
+        verts = truncate_plan(_und_degrees(und).select("id"))
+        stats: list[tuple[int, int, int]] = []  # (round, |S|, |E|)
+        for t in range(max_rounds):
+            n_verts = verts.count()
+            if n_verts == 0:
+                break
+            n_edges = cur.count()
+            stats.append((t, n_verts, n_edges))
+            run.record(round=t, vertices=n_verts, edges=n_edges)
+            deg = verts.join(_und_degrees(cur), "id", "left_outer").select(
+                "id", F.coalesce("deg", F.lit(0)).alias("deg")
+            )
+            # integer cut: deg * |S| <= 3 * |E|  (eps = 1/2)
+            out_now = truncate_plan(
+                deg.where(
+                    F.col("deg") * F.lit(n_verts) <= F.lit(3) * F.lit(n_edges)
+                ).select("id", F.lit(t).alias("removed_round"))
+            )
+            removed_batches.append(out_now)
+            # each eager checkpoint supersedes the previous round's;
+            # und stays cached for the membership recovery below
+            nxt = truncate_plan(
+                verts.join(out_now, "id", "left_anti").select("id")
+            )
+            release_plan(verts)
+            verts = nxt
+            nxt = truncate_plan(
+                cur.join(out_now.select(F.col("id").alias("lo")), "lo",
+                         "left_anti")
+                .join(out_now.select(F.col("id").alias("hi")), "hi",
+                      "left_anti")
+                .select("lo", "hi")
+            )
+            if cur is not und:
+                release_plan(cur)
+            cur = nxt
 
-    if not stats:  # edgeless input: no subgraph to report (empty, but
-        # with the id type of the input edge columns)
-        empty = _und_degrees(und).select(
-            "id",
-            F.lit(0.0).alias("density"),
-            F.lit(0).cast("long").alias("best_round"),
+        if not stats:  # edgeless input: no subgraph to report (empty,
+            # but with the id type of the input edge columns)
+            empty = _und_degrees(und).select(
+                "id",
+                F.lit(0.0).alias("density"),
+                F.lit(0).cast("long").alias("best_round"),
+            )
+            return empty, run
+        # best round: max density, earliest on exact-integer tie
+        # (cross-multiplied compare — no FP in the argmax).
+        best_t, best_v, best_e = stats[0]
+        for t, v, e in stats[1:]:
+            if e * best_v > best_e * v:  # e/v > best_e/best_v
+                best_t, best_v, best_e = t, v, e
+        density = best_e / best_v
+        run.record(phase="best", round=best_t, vertices=best_v,
+                   edges=best_e, density=density)
+
+        all_verts = _und_degrees(und).select("id")
+        if removed_batches:
+            removed = removed_batches[0]
+            for b in removed_batches[1:]:
+                removed = removed.unionByName(b)
+            members = all_verts.join(removed, "id", "left_outer").where(
+                F.col("removed_round").isNull()
+                | (F.col("removed_round") >= best_t)
+            ).select("id")
+        else:
+            members = all_verts
+        out = truncate_plan(
+            members.select(
+                "id",
+                F.lit(density).alias("density"),
+                F.lit(best_t).cast("long").alias("best_round"),
+            )
         )
+        return out, run
+    finally:
+        for b in removed_batches:
+            release_plan(b)
+        release_plan(verts)
+        if cur is not und:
+            release_plan(cur)
         und.unpersist()
-        return empty, run
-    # best round: max density, earliest on exact-integer tie
-    # (cross-multiplied compare — no FP in the argmax).
-    best_t, best_v, best_e = stats[0]
-    for t, v, e in stats[1:]:
-        if e * best_v > best_e * v:  # e/v > best_e/best_v
-            best_t, best_v, best_e = t, v, e
-    density = best_e / best_v
-    run.record(phase="best", round=best_t, vertices=best_v, edges=best_e,
-               density=density)
-
-    all_verts = _und_degrees(und).select("id")
-    if removed_batches:
-        removed = removed_batches[0]
-        for b in removed_batches[1:]:
-            removed = removed.unionByName(b)
-        members = all_verts.join(removed, "id", "left_outer").where(
-            F.col("removed_round").isNull()
-            | (F.col("removed_round") >= best_t)
-        ).select("id")
-    else:
-        members = all_verts
-    out = truncate_plan(
-        members.select(
-            "id",
-            F.lit(density).alias("density"),
-            F.lit(best_t).cast("long").alias("best_round"),
-        )
-    )
-    und.unpersist()
-    return out, run
 
 
 def avg_neighbor_degree(

@@ -122,9 +122,7 @@ def band_table(
     sig: DataFrame, k: int = DEFAULT_K, bands: int = DEFAULT_BANDS
 ) -> DataFrame:
     """LSH index rows (band_idx, band_key, doc_id) of a signature
-    table — band j's key concatenates its r = k/bands minhash strings.
-    This is the per-corpus STATE an incremental pipeline persists
-    between micro-batches (see :func:`incremental_near_duplicates`)."""
+    table — band j's key concatenates its r = k/bands minhash strings."""
     r = k // bands
     banded = None
     for j in range(bands):
@@ -208,107 +206,6 @@ def near_duplicates(
         )
         .where(F.col("jaccard") >= threshold)
     )
-
-
-def incremental_near_duplicates(
-    old_docs: DataFrame,
-    new_docs: DataFrame,
-    n: int = 5,
-    k: int = DEFAULT_K,
-    bands: int = DEFAULT_BANDS,
-    threshold: float = 0.0,
-    hash_fn: str = "md5",
-    old_index: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Micro-batch near-dup DISCOVERY: verify only pairs involving at
-    least one NEW document, by blocking the new batch's LSH bands
-    against the historical band index instead of re-running the full
-    banded self-join.  Returns ``(pairs, new_index)``:
-
-    - ``pairs`` (doc_a, doc_b, jaccard): exactly the rows
-      ``near_duplicates(old ∪ new)`` emits that involve a new doc —
-      signatures are per-document deterministic, so the new batch's
-      band buckets (and hence candidates touching a new doc) are
-      identical to the batch run's, and the Jaccard verification runs
-      the same distinct-shingle computation (old-doc shingles are
-      recomputed ONLY for docs that appear in a candidate pair, via a
-      semi-join pushed into the shingle scan).
-    - ``new_index`` = old index ∪ the new docs' band rows — persist it
-      (parquet) and pass it back as ``old_index`` next batch so the
-      historical corpus is never re-signatured.  When ``old_index`` is
-      None it is rebuilt from ``old_docs`` (first batch / recovery).
-
-    Feed ``pairs.where(jaccard >= …)`` to
-    ``streaming.refresh.refresh_dedup_clusters`` for end-to-end
-    incremental dedup (pairs → clusters) with no historical-pair
-    retention.  Per-batch cost: new-band bucket probes + verification
-    of new-involving candidates — independent of the number of
-    historical PAIRS, linear-ish in batch size for stable corpora."""
-    sig_new = _register_cache(
-        minhash_signatures(new_docs, n, k, hash_fn).persist()
-    )
-    bn = band_table(sig_new, k, bands)
-    if old_index is None:
-        sig_old = _register_cache(
-            minhash_signatures(old_docs, n, k, hash_fn).persist()
-        )
-        old_index = band_table(sig_old, k, bands)
-    all_bands = old_index.unionByName(bn)
-    a, b = all_bands.alias("a"), bn.alias("b")
-    cand = _register_cache(
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-        .persist()
-    )
-    needed = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    all_docs = old_docs.select("doc_id", "text").unionByName(
-        new_docs.select("doc_id", "text")
-    )
-    sh = _register_cache(
-        shingles(all_docs.join(needed, "doc_id", "left_semi"), n).persist()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh.withColumnsRenamed({"doc_id": "doc_a"})
-    sb = sh.withColumnsRenamed({"doc_id": "doc_b"})
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb.withColumnRenamed("shingle", "shingle_b"), "doc_b")
-        .where(F.col("shingle") == F.col("shingle_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.withColumnsRenamed({"doc_id": "doc_a", "n_sh": "n_a"})
-    nb = sizes.withColumnsRenamed({"doc_id": "doc_b", "n_sh": "n_b"})
-    pairs = (
-        cand.join(inter, ["doc_a", "doc_b"], "left_outer")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.coalesce(F.col("inter"), F.lit(0)).cast("double")
-                / (F.col("n_a") + F.col("n_b")
-                   - F.coalesce(F.col("inter"), F.lit(0))),
-                9,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return pairs, all_bands
 
 
 def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:

@@ -367,12 +367,3 @@ def symmetrize(edges: DataFrame) -> DataFrame:
         .groupBy(src, dst)
         .agg(F.sum("weight").alias("weight"))
     )
-
-
-def out_degrees(edges: DataFrame) -> DataFrame:
-    """Out-degree per source vertex (count of out-edges, and weight sum)."""
-    src = edges.columns[0]
-    return edges.groupBy(F.col(src).alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg"),
-        F.sum("weight").alias("out_weight"),
-    )

@@ -6,9 +6,8 @@ The Spark-side plumbing here is REAL and tested — schema, hash
 partitioning, Arrow batch shapes, vectorized numpy feature kernels.
 The codec itself is NOT: this container ships no image/audio
 libraries, so ``decode_features`` uses a deterministic fake decoder
-(payload bytes → numpy buffer statistics) and ``real_decode`` raises
-``NotImplementedError`` with the integration point documented.  A
-deployment with PIL/torchaudio installed swaps one function.
+(payload bytes → numpy buffer statistics).  A deployment with
+PIL/torchaudio installed swaps ``_fake_decode_batch`` for a real one.
 
 Scale notes: payloads never leave the executor — ``mapInPandas``
 streams Arrow batches (bounded by
@@ -74,16 +73,6 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def real_decode(payload: bytes, kind: str):
-    """Integration point for actual codecs (PIL / soundfile / pyav).
-    Not available in this environment by design."""
-    raise NotImplementedError(
-        "media codecs are not installed in this container; plug a real "
-        "decoder here (PIL.Image.open for images, soundfile.read for "
-        "audio, av.open for video) and return a numpy array"
-    )
-
-
 def _fake_decode_batch(payloads: pd.Series) -> np.ndarray:
     """Deterministic stand-in decoder: payload bytes as uint8 buffers,
     padded/truncated to 32 'samples' — vectorizable and stable."""
@@ -95,91 +84,11 @@ def _fake_decode_batch(payloads: pd.Series) -> np.ndarray:
     return out
 
 
-RESIZED_SCHEMA = "media_id long, width int, height int, pixels binary"
-FRAME_SCHEMA = "media_id long, frame_idx int, n_frames int, frame binary"
-
-
-def resize_images(
-    media: DataFrame, width: int = 4, height: int = 4,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Image-resize plumbing: filters ``kind = 'image'`` rows, decodes
-    each payload (fake decoder — ``real_decode`` is the swap-in point
-    for PIL), resamples the buffer to ``height*width`` samples with
-    deterministic nearest-neighbor index arithmetic, and re-encodes as
-    a binary pixel block.  Returns (media_id, width, height, pixels).
-
-    The Spark shape is the real one: a pushed-down kind filter, Arrow
-    batches in, one row out per image, binary column out — swapping
-    the fake for PIL changes only the numpy lines."""
-    imgs = media.where(F.col("kind") == "image")
-    if partitions:
-        imgs = imgs.repartition(partitions, "media_id")
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_out = width * height
-        for pdf in batches:
-            out_px = []
-            for b in pdf["payload"]:
-                buf = np.frombuffer(b, dtype=np.uint8)
-                idx = (np.arange(n_out) * len(buf)) // n_out
-                out_px.append(buf[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": np.full(len(pdf), width, dtype=np.int32),
-                    "height": np.full(len(pdf), height, dtype=np.int32),
-                    "pixels": out_px,
-                }
-            )
-
-    return imgs.mapInPandas(do_resize, RESIZED_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, frame_bytes: int = 8,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Video frame-sampling plumbing: filters ``kind = 'video'`` rows
-    and fans each payload out to ``n_frames`` evenly-spaced frames
-    (fake codec: the payload is treated as a sequence of
-    ``frame_bytes``-byte frames; a real deployment swaps in pyav and
-    keeps the fan-out shape).  Returns one row per sampled frame:
-    (media_id, frame_idx, n_frames, frame) — the 1→N mapInPandas
-    expansion a frame-level feature extractor consumes downstream."""
-    vids = media.where(F.col("kind") == "video")
-    if partitions:
-        vids = vids.repartition(partitions, "media_id")
-
-    def do_sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, totals, frames = [], [], [], []
-            for mid, b in zip(pdf["media_id"], pdf["payload"]):
-                total = max(len(b) // frame_bytes, 1)
-                take = min(n_frames, total)
-                for j in range(take):
-                    pos = (j * total) // take
-                    ids.append(mid)
-                    idxs.append(pos)
-                    totals.append(total)
-                    frames.append(b[pos * frame_bytes:(pos + 1) * frame_bytes])
-            yield pd.DataFrame(
-                {
-                    "media_id": np.array(ids, dtype=np.int64),
-                    "frame_idx": np.array(idxs, dtype=np.int32),
-                    "n_frames": np.array(totals, dtype=np.int32),
-                    "frame": frames,
-                }
-            )
-
-    return vids.mapInPandas(do_sample, FRAME_SCHEMA)
-
-
 def decode_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
     """Arrow-batched feature extraction over the media table.  Returns
     (media_id, kind, n_bytes, mean, std, feat[8]) — the plumbing a real
-    decode/resize/frame-sample pipeline would use, with the decoder
-    faked (see module docstring)."""
+    decode pipeline would use, with the decoder faked (see module
+    docstring)."""
     if partitions:
         media = media.repartition(partitions, "media_id")
 

@@ -1,18 +1,13 @@
 """A9 — approximate neighborhood function (FM sketches on the bit_or
 combiner): engine vs python oracle (exact, because the sketch is
-derandomized), capped-radius semantics, partition invariance, and the
-effective-diameter read-out."""
+derandomized), capped-radius semantics and partition invariance."""
 
 import pytest
 
 from tests.conftest import id_space
 from tests.oracle_pregel import oracle_anf
 
-from mesos_pregel_spark.algos.anf import (
-    anf,
-    effective_diameter,
-    neighborhood_sketches,
-)
+from mesos_pregel_spark.algos.anf import anf, neighborhood_sketches
 from mesos_pregel_spark.fixtures import generate_transcripts, micro_graph_df
 from mesos_pregel_spark.functions.edges import build_edges, edges_with_ids
 
@@ -72,18 +67,6 @@ def test_sketches_monotone(spark):
     for v in m1:
         for a, b in zip(m1[v], m2[v]):
             assert a & b == a  # subset as bitmasks
-
-
-def test_effective_diameter(spark):
-    ids_df, edges, _names = id_space(spark, micro_graph_df(spark, "k4"))
-    h_eff, ns, _run = effective_diameter(
-        spark, ids_df, q=0.9, max_h=8, k=8
-    )
-    # N(h) non-decreasing, h_eff indexes into the recorded rounds
-    assert all(b >= a - 1e-9 for a, b in zip(ns, ns[1:]))
-    assert 1 <= h_eff <= len(ns)
-    # k4 is complete: one round reaches everything
-    assert h_eff == 1
 
 
 def test_register_count_validated(spark):

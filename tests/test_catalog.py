@@ -60,3 +60,26 @@ def test_iceberg_default_namespace(spark):
         assert cat._ident("vertices") == "icetest2.default.vertices"
     finally:
         spark.conf.unset("spark.sql.catalog.icetest2")
+
+
+def test_read_transcripts_roundtrip(spark, tmp_path):
+    """The transcript read path: a table written through the catalog
+    comes back from read_transcripts with the same rows."""
+    from mesos_pregel_spark.fixtures import generate_transcripts
+    from mesos_pregel_spark.sources.transcripts import read_transcripts
+
+    t = generate_transcripts(spark, 20)
+    open_catalog(spark, str(tmp_path)).write(t, "transcripts")
+    got = read_transcripts(spark, str(tmp_path))
+    assert got.columns == t.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, t.collect()))
+
+
+def test_read_transcripts_rejects_missing_column(spark, tmp_path):
+    from mesos_pregel_spark.fixtures import generate_transcripts
+    from mesos_pregel_spark.sources.transcripts import read_transcripts
+
+    t = generate_transcripts(spark, 20).drop("tool")
+    open_catalog(spark, str(tmp_path)).write(t, "transcripts")
+    with pytest.raises(ValueError, match="missing columns"):
+        read_transcripts(spark, str(tmp_path))

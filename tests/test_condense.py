@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from mesos_pregel_spark.algos.condense import (
     condensation,
@@ -80,53 +79,19 @@ def test_superstep_cap_truncates_levels_exactly(spark):
     }
 
 
-def test_warm_dag_levels_matches_cold(spark):
-    from mesos_pregel_spark.streaming.refresh import warm_dag_levels
+def test_dag_levels_takes_longest_path(spark):
+    from mesos_pregel_spark.algos.condense import dag_levels
 
-    # deterministic layered DAG: chain 0->1->...->7 plus skip edges
-    base = [(f"v{i}", f"v{i+1}") for i in range(7)]
-    base += [("v0", "v3"), ("v2", "v5")]
-    delta = [("v5", "w0"), ("w0", "w1"), ("v1", "v6")]
-
-    cold_prev, run_prev = warm_dag_levels(
-        spark, _edges(spark, base), prev_levels=None
-    )
-    prev_pd = cold_prev.select(
-        "comp", "level"
-    )
-    full = _edges(spark, base + delta)
-    cold_full, run_cold = warm_dag_levels(spark, full, prev_levels=None)
-    warm_full, run_warm = warm_dag_levels(
-        spark, full,
-        prev_levels=prev_pd,
-        delta_edges=_edges(spark, delta),
-    )
-    cold = {r["comp"]: (r["n_vertices"], r["level"])
-            for r in cold_full.collect()}
-    warm = {r["comp"]: (r["n_vertices"], r["level"])
-            for r in warm_full.collect()}
-    assert warm == cold
-    # the delta frontier re-propagates only the perturbed region
-    assert len(run_warm.metrics) <= len(run_cold.metrics)
-
-
-def test_warm_dag_levels_without_delta_is_exact(spark):
-    from mesos_pregel_spark.streaming.refresh import warm_dag_levels
-
-    base = [("a", "b"), ("b", "c")]
-    delta = [("c", "d")]
-    prev, _ = warm_dag_levels(spark, _edges(spark, base), prev_levels=None)
-    full = _edges(spark, base + delta)
-    # prev_converged=False drops the delta: one full re-send round,
-    # values still exactly the cold fixpoint
-    warm, _run = warm_dag_levels(
-        spark, full,
-        prev_levels=prev.select("comp", "level"),
-        delta_edges=_edges(spark, delta),
-        prev_converged=False,
-    )
-    got = {r["comp"]: r["level"] for r in warm.collect()}
-    assert got == {"a": 0, "b": 1, "c": 2, "d": 3}
+    # layered DAG: chain v0->...->v7, skip edges that a longer path
+    # dominates, and a branch w0->w1 hanging off v5
+    pairs = [(f"v{i}", f"v{i+1}") for i in range(7)]
+    pairs += [("v0", "v3"), ("v2", "v5"), ("v1", "v6")]
+    pairs += [("v5", "w0"), ("w0", "w1")]
+    out, _run = dag_levels(spark, _edges(spark, pairs))
+    got = {r["comp"]: (r["n_vertices"], r["level"]) for r in out.collect()}
+    expected = {f"v{i}": (1, i) for i in range(8)}
+    expected.update({"w0": (1, 6), "w1": (1, 7)})
+    assert got == expected
 
 
 def test_transitive_redundancy_diamond(spark):

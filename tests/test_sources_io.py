@@ -1,18 +1,10 @@
-"""Source formats (JSONL/CSV transcript ingestion with the fixed
-schema) and the bucketed sink (co-located joins compile to
-zero-Exchange plans)."""
+"""Source formats: JSONL/CSV transcript ingestion with the fixed
+schema."""
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from mesos_pregel_spark.fixtures import generate_transcripts
 from mesos_pregel_spark.functions.edges import build_edges
-from mesos_pregel_spark.sources.sinks import (
-    plan_has_exchange,
-    read_table,
-    write_bucketed,
-)
 from mesos_pregel_spark.sources.transcripts import read_transcript_files
 
 
@@ -44,44 +36,3 @@ def test_transcript_formats_same_edges(spark, tmp_path, fmt):
 def test_transcript_format_rejects_unknown(spark, tmp_path):
     with pytest.raises(ValueError, match="unsupported"):
         read_transcript_files(spark, str(tmp_path), "orc2000")
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed (16, src): their equi-join on src must show
-    NO Exchange in the physical plan — the shuffle was paid at write
-    time.  A path-based read of one side (bucketing metadata lost)
-    must bring the Exchange back."""
-    edges = spark.range(0, 5000).select(
-        (F.col("id") % 500).alias("src"),
-        ((F.col("id") * 7) % 500).alias("dst"),
-    )
-    state = spark.range(0, 500).select(
-        F.col("id").alias("src"), F.rand(7).alias("value")
-    )
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    bcast_before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # force the sort-merge path: broadcasting the small side would
-    # sidestep the bucketing question entirely
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(edges, "tb_edges", "src", 16)
-        write_bucketed(state, "tb_state", "src", 16)
-        be, bs = read_table(spark, "tb_edges"), read_table(spark, "tb_state")
-
-        joined = be.join(bs, "src")
-        assert not plan_has_exchange(joined)
-        # same answer as the plain join, shuffle or not
-        plain = edges.join(state, "src")
-        assert joined.count() == plain.count() == 5000
-
-        unbucketed = spark.read.parquet(
-            spark.sql("DESCRIBE TABLE EXTENDED tb_state")
-            .where("col_name = 'Location'").first()["data_type"]
-        )
-        assert plan_has_exchange(be.join(unbucketed, "src"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_before)
-        spark.sql("DROP TABLE IF EXISTS tb_edges")
-        spark.sql("DROP TABLE IF EXISTS tb_state")

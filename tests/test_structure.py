@@ -328,6 +328,26 @@ def test_densest_subgraph_edgeless(spark):
     assert out.collect() == []
 
 
+@pytest.mark.parametrize("shape", ["clique_plus_tail", "edgeless"])
+def test_densest_subgraph_releases_round_checkpoints(spark, shape):
+    """Once the result is collected, only the result's own checkpoint
+    is still persisted: no per-round survivor, edge or removal
+    checkpoint, and not the undirected edge cache."""
+    if shape == "edgeless":
+        df = spark.createDataFrame(
+            [("a", "a", 1.0)], "src string, dst string, weight double"
+        )
+    else:
+        clique = [(a, b) for a in "pqrst" for b in "pqrst" if a < b]
+        tail = [("t", "u"), ("u", "v"), ("v", "w"), ("w", "x")]
+        df = _df(spark, clique + tail)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    out, _run = densest_subgraph(spark, df)
+    out.collect()
+    assert jsc.getPersistentRDDs().size() <= before + 1
+
+
 def test_densest_partition_invariance(spark):
     clique = [(a, b) for a in "pqrst" for b in "pqrst" if a < b]
     tail = [("t", "u"), ("u", "v")]

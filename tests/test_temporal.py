@@ -101,15 +101,14 @@ def test_warm_temporal_reach_matches_cold(spark):
     that opens earlier paths AND reaches new vertices, warm-refresh,
     compare against a cold run on the union — exact equality, fewer
     supersteps than the cold run."""
-    from mesos_pregel_spark.streaming.refresh import warm_temporal_reach
-
     batch1 = [(0, 1, 100), (1, 2, 200), (2, 3, 300), (0, 4, 500)]
     delta = [(0, 2, 150), (3, 5, 400), (4, 6, 600)]
     prev, _ = temporal_reach(spark, _df(spark, batch1), 0,
                              max_supersteps=10, edge_partitions=2)
     union = _df(spark, batch1 + delta, parts=3)
-    warm, run_warm = warm_temporal_reach(
-        spark, union, 0, prev, delta_transitions=_df(spark, delta),
+    warm, run_warm = temporal_reach(
+        spark, union, 0, prev_arrivals=prev,
+        delta_transitions=_df(spark, delta),
         max_supersteps=10, edge_partitions=3,
     )
     cold, run_cold = temporal_reach(spark, union, 0,
@@ -120,11 +119,9 @@ def test_warm_temporal_reach_matches_cold(spark):
 
 
 def test_warm_temporal_reach_no_prev_is_cold(spark):
-    from mesos_pregel_spark.streaming.refresh import warm_temporal_reach
-
     tr = [(0, 1, 10), (1, 2, 20)]
-    a, _ = warm_temporal_reach(spark, _df(spark, tr), 0, None,
-                               max_supersteps=6, edge_partitions=2)
+    a, _ = temporal_reach(spark, _df(spark, tr), 0, prev_arrivals=None,
+                          max_supersteps=6, edge_partitions=2)
     b, _ = temporal_reach(spark, _df(spark, tr), 0,
                           max_supersteps=6, edge_partitions=2)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
@@ -133,15 +130,13 @@ def test_warm_temporal_reach_no_prev_is_cold(spark):
 def test_warm_temporal_reach_no_delta_frontier(spark):
     """Without delta info every finitely-reached vertex re-sends once;
     the refresh still lands exactly on the cold fixpoint."""
-    from mesos_pregel_spark.streaming.refresh import warm_temporal_reach
-
     batch1 = [(0, 1, 100), (1, 2, 200)]
     delta = [(2, 3, 250), (0, 3, 90)]
     prev, _ = temporal_reach(spark, _df(spark, batch1), 0,
                              max_supersteps=10, edge_partitions=2)
     union = _df(spark, batch1 + delta)
-    warm, _ = warm_temporal_reach(spark, union, 0, prev,
-                                  max_supersteps=10, edge_partitions=2)
+    warm, _ = temporal_reach(spark, union, 0, prev_arrivals=prev,
+                             max_supersteps=10, edge_partitions=2)
     cold, _ = temporal_reach(spark, union, 0,
                              max_supersteps=10, edge_partitions=2)
     assert sorted(map(tuple, warm.collect())) == \
@@ -150,13 +145,11 @@ def test_warm_temporal_reach_no_delta_frontier(spark):
 
 def test_warm_temporal_reach_capped_prev_needs_full_frontier(spark):
     """Regression (r5 self-review finding): the delta-source frontier
-    is sound ONLY for a converged prev.  With a capped prev the
-    wrapper's prev_converged=False must fall back to the full finite
-    frontier and still land exactly on the cold fixpoint (the naive
+    is sound ONLY for a converged prev.  With a capped prev the caller
+    passes delta_transitions=None, which falls back to the full finite
+    frontier and still lands exactly on the cold fixpoint (the naive
     delta frontier would leave the interrupted old-chain propagation
     dead and return stale arrivals)."""
-    from mesos_pregel_spark.streaming.refresh import warm_temporal_reach
-
     chain = [(i, i + 1, (i + 1) * 10) for i in range(8)]  # 0→1→…→8
     delta = [(0, 9, 5)]
     # capped BEFORE the fixpoint: vertices 5..8 still unreached
@@ -165,9 +158,9 @@ def test_warm_temporal_reach_capped_prev_needs_full_frontier(spark):
     prev_at_fixpoint = run_prev.metrics[-1]["active"] == 0
     assert not prev_at_fixpoint  # the frontier was still moving
     union = _df(spark, chain + delta)
-    warm, _ = warm_temporal_reach(
-        spark, union, 0, prev, delta_transitions=_df(spark, delta),
-        prev_converged=prev_at_fixpoint,
+    warm, _ = temporal_reach(
+        spark, union, 0, prev_arrivals=prev,
+        delta_transitions=_df(spark, delta) if prev_at_fixpoint else None,
         max_supersteps=20, edge_partitions=2,
     )
     cold, _ = temporal_reach(spark, union, 0,

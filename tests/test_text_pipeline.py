@@ -174,47 +174,6 @@ def test_multimodal_feature_plumbing(spark, docs):
     assert a == b
 
 
-def test_resize_and_frame_sample_plumbing(spark, docs):
-    from mesos_pregel_spark.sources.multimodal import (
-        resize_images,
-        sample_frames,
-        synthesize_media,
-    )
-
-    media = synthesize_media(docs)
-    n_img = media.where("kind = 'image'").count()
-    n_vid = media.where("kind = 'video'").count()
-    assert n_img > 0 and n_vid > 0
-
-    resized = resize_images(media, width=4, height=4, partitions=3).collect()
-    assert len(resized) == n_img
-    for r in resized:
-        assert (r["width"], r["height"]) == (4, 4)
-        assert len(r["pixels"]) == 16  # height*width samples
-    # deterministic across partitionings
-    again = resize_images(media, width=4, height=4, partitions=2).collect()
-    assert sorted((r["media_id"], bytes(r["pixels"])) for r in resized) == \
-        sorted((r["media_id"], bytes(r["pixels"])) for r in again)
-
-    frames = sample_frames(media, n_frames=4, frame_bytes=8, partitions=3).collect()
-    # payload = 32 bytes -> 4 frames of 8; every video yields exactly 4
-    assert len(frames) == n_vid * 4
-    by_media: dict[int, list] = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    for mid, rows in by_media.items():
-        assert sorted(r["frame_idx"] for r in rows) == [0, 1, 2, 3]
-        assert all(len(r["frame"]) == 8 for r in rows)
-        assert all(r["n_frames"] == 4 for r in rows)
-
-
-def test_real_decode_is_explicit_stub():
-    from mesos_pregel_spark.sources.multimodal import real_decode
-
-    with pytest.raises(NotImplementedError):
-        real_decode(b"\x00", "image")
-
-
 def test_minhash_xxhash64_variant_finds_planted_dups(spark):
     """The scale-variant minhash (native 64-bit xxhash64 instead of md5
     hex strings) preserves the dedup contract: identical docs have
@@ -296,60 +255,6 @@ def test_embedding_near_dups_external_block_col(spark):
            for r in embedding_near_dups(
                spark, emb, threshold=0.99, block_col="label").collect()}
     assert got == {(0, 1): 1.0}
-
-
-def test_incremental_near_duplicates_equals_batch(spark):
-    """Micro-batch LSH blocking: pairs from the incremental path ≡ the
-    batch near_duplicates(full) rows that involve a new doc, with
-    identical jaccard values; union with batch(old) recovers batch(full)
-    exactly.  Chained: batch-3 reuses the returned index (historical
-    corpus never re-signatured) and still matches."""
-    from mesos_pregel_spark.functions.dedup import (
-        incremental_near_duplicates,
-        near_duplicates,
-        release_dedup_caches,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog while rain "
-            "falls softly on the quiet town square tonight")
-    other = ("distributed engines shuffle vertex messages across many "
-             "partitions to converge on a stable fixpoint quickly")
-    schema = "doc_id long, text string"
-    b1 = [(1, base), (2, base.replace("quick", "swift")), (10, other)]
-    b2 = [(3, base.replace("lazy", "sleepy")),
-          (11, other.replace("quickly", "rapidly"))]
-    b3 = [(4, base.replace("dog", "hound")), (20, "totally unrelated "
-          "text about cooking pasta with plenty of garlic and olive oil")]
-    d1 = spark.createDataFrame(b1, schema=schema)
-    d2 = spark.createDataFrame(b2, schema=schema)
-    d3 = spark.createDataFrame(b3, schema=schema)
-
-    def pairset(df):
-        return {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in df.collect()}
-
-    full12 = near_duplicates(d1.unionByName(d2))
-    old1 = near_duplicates(d1)
-    inc2, idx2 = incremental_near_duplicates(d1, d2)
-    got2 = pairset(inc2)
-    new_ids = {3, 11}
-    expect2 = {k: v for k, v in pairset(full12).items()
-               if k[0] in new_ids or k[1] in new_ids}
-    assert got2 == expect2 and len(got2) > 0
-    assert pairset(old1) | got2 == pairset(full12)
-
-    # batch 3: reuse the index returned by batch 2 (old_docs only feeds
-    # candidate verification text lookup)
-    idx2 = idx2.localCheckpoint(eager=True)
-    release_dedup_caches()
-    d12 = d1.unionByName(d2)
-    inc3, _idx3 = incremental_near_duplicates(d12, d3, old_index=idx2)
-    got3 = pairset(inc3)
-    full123 = near_duplicates(d12.unionByName(d3))
-    new3 = {4, 20}
-    assert got3 == {k: v for k, v in pairset(full123).items()
-                    if k[0] in new3 or k[1] in new3}
-    assert len(got3) > 0
-    release_dedup_caches()
 
 
 # ---------------------------------------------------------------------------

@@ -1,15 +1,10 @@
-"""Warm-start CC (additions-only) + incremental dedup-cluster refresh:
-warm ≡ cold labels, with measurably fewer supersteps on a micro-batch
-delta; refresh over the star quotient ≡ full re-run over all pairs."""
+"""Warm-start CC (additions-only): ``connected_components`` seeded with
+``prev_labels`` ≡ cold labels, with measurably fewer supersteps on a
+micro-batch delta."""
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mesos_pregel_spark.algos.cc import connected_components
-from mesos_pregel_spark.streaming.refresh import (
-    refresh_dedup_clusters,
-    warm_connected_components,
-)
 
 _EDGE_SCHEMA = T.StructType([
     T.StructField("src", T.LongType(), False),
@@ -42,8 +37,8 @@ def test_warm_equals_cold_fewer_supersteps(spark):
         schema="id long, component long",
     )
     cold, cold_run = connected_components(spark, full_df, edge_partitions=4)
-    warm, warm_run = warm_connected_components(
-        spark, full_df, prev, delta_edges=_edges(spark, delta),
+    warm, warm_run = connected_components(
+        spark, full_df, prev_labels=prev, delta_edges=_edges(spark, delta),
         edge_partitions=4,
     )
     assert _labels(warm) == _labels(cold)
@@ -65,8 +60,8 @@ def test_warm_without_delta_still_exact(spark):
         [(i, 0) for i in range(25)], schema="id long, component long",
     )
     cold, _ = connected_components(spark, full_df, edge_partitions=4)
-    warm, warm_run = warm_connected_components(
-        spark, full_df, prev, edge_partitions=4,
+    warm, warm_run = connected_components(
+        spark, full_df, prev_labels=prev, edge_partitions=4,
     )
     assert _labels(warm) == _labels(cold)
     assert len(warm_run.metrics) <= 6
@@ -81,93 +76,10 @@ def test_warm_new_vertices_cold_seeded(spark):
     prev = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1)], schema="id long, component long",
     )
-    warm, _ = warm_connected_components(
-        spark, full_df, prev, delta_edges=_edges(spark, delta),
+    warm, _ = connected_components(
+        spark, full_df, prev_labels=prev, delta_edges=_edges(spark, delta),
         edge_partitions=4,
     )
     cold, _ = connected_components(spark, full_df, edge_partitions=4)
     assert _labels(warm) == _labels(cold)
     assert _labels(warm)[8] == 1 and _labels(warm)[10] == 9
-
-
-def _clusters(df):
-    return {r["doc_id"]: (r["cluster"], r["keep"]) for r in df.collect()}
-
-
-def test_refresh_dedup_clusters_equals_full_rerun(spark):
-    """Micro-batch cluster maintenance over the star quotient must
-    equal CC over ALL historical pairs (the batch dedup_clusters
-    semantics), including transitive merges across the batch boundary
-    and untouched singleton keepers."""
-    pair_schema = "doc_a long, doc_b long"
-    batch1 = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], schema=pair_schema)
-    batch2 = spark.createDataFrame([(3, 10), (20, 21)], schema=pair_schema)
-
-    def pairs_to_edges(p):
-        return p.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"),
-            F.lit(1.0).alias("weight"),
-        )
-
-    # previous assignment = batch-1 clusters + an untouched singleton 50
-    comps1, _ = connected_components(
-        spark, pairs_to_edges(batch1), edge_partitions=4)
-    prev = comps1.select(
-        F.col("id").alias("doc_id"), F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("keep"),
-    ).unionByName(spark.createDataFrame(
-        [(50, 50, True)], schema="doc_id long, cluster long, keep boolean"))
-
-    refreshed, refresh_run = refresh_dedup_clusters(spark, prev, batch2)
-
-    full, _ = connected_components(
-        spark, pairs_to_edges(batch1.unionByName(batch2)), edge_partitions=4)
-    expected = {
-        r["id"]: (r["component"], r["id"] == r["component"])
-        for r in full.collect()
-    }
-    expected[50] = (50, True)  # singleton untouched by any pair
-    assert _clusters(refreshed) == expected
-    # the star quotient floods a merged cluster through its hub —
-    # supersteps stay O(1) regardless of how many docs the old
-    # clusters hold
-    assert len(refresh_run.metrics) <= 5
-
-
-def test_refresh_dedup_clusters_chained_batches(spark):
-    """Three micro-batches folded in sequence ≡ one cold run over the
-    union — the streaming cadence (mirrors test_streaming_refresh's
-    e2e shape for PageRank)."""
-    pair_schema = "doc_a long, doc_b long"
-    batches = [
-        [(1, 2), (5, 6)],
-        [(2, 5)],                # merges {1,2} with {5,6}
-        [(6, 9), (30, 31)],      # extends the merged cluster + new pair
-    ]
-    dfs = [spark.createDataFrame(b, schema=pair_schema) for b in batches]
-
-    def pairs_to_edges(p):
-        return p.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"),
-            F.lit(1.0).alias("weight"),
-        )
-
-    comps, _ = connected_components(
-        spark, pairs_to_edges(dfs[0]), edge_partitions=4)
-    state = comps.select(
-        F.col("id").alias("doc_id"), F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("keep"),
-    )
-    for b in dfs[1:]:
-        state, _ = refresh_dedup_clusters(spark, state, b)
-
-    all_pairs = dfs[0]
-    for b in dfs[1:]:
-        all_pairs = all_pairs.unionByName(b)
-    full, _ = connected_components(
-        spark, pairs_to_edges(all_pairs), edge_partitions=4)
-    expected = {
-        r["id"]: (r["component"], r["id"] == r["component"])
-        for r in full.collect()
-    }
-    assert _clusters(state) == expected
