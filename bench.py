@@ -1395,8 +1395,8 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         # Time-respecting earliest arrival over the bench multigraph
         # with deterministic pseudo-timestamps (xxhash64 over a fixed
         # 10^9-µs window), then a warm refresh after a 0.1% delta
-        # batch — the cold kernel AND the streaming warm path at
-        # bench scale.
+        # batch — the cold kernel AND temporal_reach's warm refresh
+        # at bench scale.
         from mesos_pregel_spark.algos.temporal import temporal_reach
 
         tre = g.select(

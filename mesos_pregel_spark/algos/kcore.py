@@ -43,17 +43,8 @@ def k_core(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
     edge_partitions: int | None = None,
-    prune_edges: bool = False,
 ) -> tuple[DataFrame, PregelRun]:
-    """Peel to the k-core.  Returns (membership(id, in_core), run).
-
-    ``prune_edges=True`` demonstrates topology mutation [P §3.4]: after
-    each peeling round the edge table itself drops every edge incident
-    to a peeled vertex, so later supersteps scan a SHRINKING graph.
-    Result-identical to the default (dead vertices never send anyway —
-    pytest-asserted); worth the two semi-joins per round when early
-    rounds remove large fractions (real web graphs: the degree-1 tail
-    is a large share of vertices)."""
+    """Peel to the k-core.  Returns (membership(id, in_core), run)."""
 
     def init(e: DataFrame, ctx: dict) -> DataFrame:
         # symmetrized: src covers every non-isolated vertex
@@ -73,16 +64,6 @@ def k_core(
             )
         )
 
-    def mutate(e: DataFrame, state: DataFrame, ctx: dict) -> DataFrame | None:
-        if ctx["aggs"].get("removed", 0) == 0:
-            return None  # quiet round: keep the current table
-        alive = state.where(F.col("alive")).select("id")
-        return (
-            e.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
-
     program = VertexProgram(
         name="kcore",
         init=init,
@@ -98,7 +79,6 @@ def k_core(
             F.sum(F.col("alive").cast("long")).alias("core_size"),
         ],
         halt=lambda aggs: aggs["removed"] == 0,
-        mutate_edges=mutate if prune_edges else None,
         # a capped run is still exact for the steps it ran (monotone
         # peeling) — don't report it as interrupted
         converged_at_cap=True,

@@ -33,7 +33,9 @@ constant-factor redundancy measured at ~2.4× triangles in BENCH_r03).
 Equality with the recount semantics is exact: the support of a
 survivor in G_{t+1} is its support in G_t minus the number of its
 G_t-triangles containing ≥1 removed edge.  State (the support table)
-is truncated with an eager localCheckpoint per round.
+is truncated with an eager localCheckpoint per round, and each
+superseded round's checkpoint is released as the peel advances; the
+result is materialized before the rest are released (on failure too).
 
 ``trussness`` (the full decomposition — trussness(e) = the largest k
 such that e survives in the k-truss) runs the same peel at increasing
@@ -56,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mesos_pregel_spark.plans.pregel import PregelRun
-from mesos_pregel_spark.plans.truncate import truncate_plan
+from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
 
 
 def _round_support(e: DataFrame) -> DataFrame:
@@ -233,7 +235,7 @@ def _apply_removals(
 
 
 def _canonical_edges(edges: DataFrame, nparts: int) -> DataFrame:
-    return (
+    return truncate_plan(
         edges.select(
             F.least("src", "dst").alias("lo"),
             F.greatest("src", "dst").alias("hi"),
@@ -241,7 +243,6 @@ def _canonical_edges(edges: DataFrame, nparts: int) -> DataFrame:
         .where(F.col("lo") != F.col("hi"))
         .distinct()
         .repartition(nparts, "lo")
-        .localCheckpoint(eager=True)  # one-shot: no compounding
     )
 
 
@@ -261,35 +262,42 @@ def k_truss(
     need = k - 2
     sup: DataFrame | None = None
     deg: DataFrame | None = None
+    removed: DataFrame | None = None
     n_edges = -1
-    while run.superstep < max_rounds:
-        if sup is None:
-            n_edges = e.count()
+    try:
+        while run.superstep < max_rounds:
+            if sup is None:
+                n_edges = e.count()
+                if n_edges == 0:
+                    break
+                sup = _initial_support(e)  # round 1: the one global count
+                deg = _static_degrees(e)
             if n_edges == 0:
                 break
-            sup = _initial_support(e)  # round 1: the one global count
-            deg = _static_degrees(e)
-        if n_edges == 0:
-            break
-        removed = truncate_plan(
-            sup.where(F.col("support") < need)
-            .select("lo", "hi")
-        )
-        n_removed = removed.count()
-        run.record(edges=n_edges, removed=n_removed)
-        run.next_superstep()
-        if n_removed == 0:
-            break
-        sup = _apply_removals(sup, removed, deg)
-        # |G_{t+1}| is arithmetic — removal is exact set subtraction —
-        # so the loop never re-counts the support table (one fewer
-        # Spark action per round; the peel is action-latency-bound
-        # once removals shrink).
-        n_edges -= n_removed
-    result = sup.select("lo", "hi") if sup is not None else e
-    if deg is not None:
-        deg.unpersist()
-    return run.finish(result), run
+            removed = truncate_plan(
+                sup.where(F.col("support") < need)
+                .select("lo", "hi")
+            )
+            n_removed = removed.count()
+            run.record(edges=n_edges, removed=n_removed)
+            run.next_superstep()
+            if n_removed == 0:
+                break
+            nxt = _apply_removals(sup, removed, deg)
+            release_plan(sup)
+            release_plan(removed)
+            sup, removed = nxt, None
+            # |G_{t+1}| is arithmetic — removal is exact set subtraction —
+            # so the loop never re-counts the support table (one fewer
+            # Spark action per round; the peel is action-latency-bound
+            # once removals shrink).
+            n_edges -= n_removed
+        # materialized before the finally releases what it reads
+        result = truncate_plan((sup if sup is not None else e).select("lo", "hi"))
+        return run.finish(result), run
+    finally:
+        for df in (e, deg, sup, removed):
+            release_plan(df)
 
 
 def trussness(
@@ -328,51 +336,57 @@ def trussness(
     e = _canonical_edges(edges, nparts)
     run = PregelRun(spark, "trussness")
     strata: list[DataFrame] = []  # per-level removed edges, labeled
+    removed_batches: list[DataFrame] = []  # the checkpoints strata read
     sup: DataFrame | None = None
     deg: DataFrame | None = None
-    n_edges = e.count()
-    if n_edges > 0:
-        sup = _initial_support(e)  # the one global triangle count
-        deg = _static_degrees(e)
-    for k in range(3, max_k + 1):
-        need = k - 2
-        rounds = 0
-        while sup is not None and rounds < max_rounds_per_level:
-            if n_edges == 0:
+    try:
+        n_edges = e.count()
+        if n_edges > 0:
+            sup = _initial_support(e)  # the one global triangle count
+            deg = _static_degrees(e)
+        for k in range(3, max_k + 1):
+            need = k - 2
+            rounds = 0
+            while sup is not None and rounds < max_rounds_per_level:
+                if n_edges == 0:
+                    break
+                removed = truncate_plan(
+                    sup.where(F.col("support") < need)
+                    .select("lo", "hi")
+                )
+                removed_batches.append(removed)
+                n_removed = removed.count()
+                rounds += 1
+                run.record(level=k, edges=n_edges, removed=n_removed)
+                run.next_superstep()
+                if n_removed == 0:
+                    break
+                # removed at level k => trussness k-1
+                strata.append(removed.select(
+                    "lo", "hi", F.lit(k - 1).cast("long").alias("trussness")
+                ))
+                nxt = _apply_removals(sup, removed, deg)
+                release_plan(sup)
+                sup = nxt
+                # arithmetic size maintenance — no per-round re-count
+                n_edges -= n_removed
+            if sup is None or n_edges == 0:
                 break
-            removed = truncate_plan(
-                sup.where(F.col("support") < need)
-                .select("lo", "hi")
+        n_survivors = n_edges if sup is not None else 0
+        if n_survivors > 0:
+            # Cap saturation: the true trussness of these edges is >= max_k
+            # and may exceed it — surfaced in run.metrics for callers/bench.
+            run.record(
+                phase="cap", cap_saturated=True, level=max_k,
+                survivors=n_survivors,
             )
-            n_removed = removed.count()
-            rounds += 1
-            run.record(level=k, edges=n_edges, removed=n_removed)
-            run.next_superstep()
-            if n_removed == 0:
-                break
-            # removed at level k => trussness k-1
-            strata.append(removed.select(
-                "lo", "hi", F.lit(k - 1).cast("long").alias("trussness")
-            ))
-            sup = _apply_removals(sup, removed, deg)
-            # arithmetic size maintenance — no per-round re-count
-            n_edges -= n_removed
-        if sup is None or n_edges == 0:
-            break
-    if deg is not None:
-        deg.unpersist()
-    n_survivors = n_edges if sup is not None else 0
-    if n_survivors > 0:
-        # Cap saturation: the true trussness of these edges is >= max_k
-        # and may exceed it — surfaced in run.metrics for callers/bench.
-        run.record(
-            phase="cap", cap_saturated=True, level=max_k,
-            survivors=n_survivors,
+        out = (sup if sup is not None else e).select(
+            "lo", "hi", F.lit(max_k).cast("long").alias("trussness")
         )
-    survivors = (sup if sup is not None else e).select(
-        "lo", "hi", F.lit(max_k).cast("long").alias("trussness")
-    )
-    out = survivors
-    for s in strata:
-        out = out.unionByName(s)
-    return run.finish(out), run
+        for s in strata:
+            out = out.unionByName(s)
+        # materialized before the finally releases the strata it reads
+        return run.finish(truncate_plan(out)), run
+    finally:
+        for df in (e, deg, sup, *removed_batches):
+            release_plan(df)

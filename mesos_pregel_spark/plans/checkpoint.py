@@ -138,36 +138,3 @@ class CheckpointManager:
         return self.spark.read.parquet(
             os.path.join(self._step_dir(superstep), "vertices")
         )
-
-    # ---- topology snapshots (mutation runs) --------------------------
-    # A mutate_edges program makes the edge table part of the run's
-    # state; without it a resume would replay against the ORIGINAL
-    # edges.  The loop writes the post-mutation edge table alongside
-    # each vertex checkpoint (zstd parquet — edges dominate snapshot
-    # bytes); resume reads it back.  Written AFTER the vertex manifest:
-    # a crash in between leaves a checkpoint whose missing snapshot the
-    # resume path rejects loudly rather than resuming wrong.
-
-    def write_edges(self, edges: DataFrame, superstep: int) -> None:
-        path = self._step_dir(superstep)
-        meta_path = os.path.join(path, _META)
-        meta = None
-        if os.path.exists(meta_path):  # record the snapshot in lineage
-            with open(meta_path) as f:
-                meta = json.load(f)
-        tmp_path = os.path.join(path, "_edges.tmp")
-        edges.write.mode("overwrite").option("compression", "zstd").parquet(
-            tmp_path
-        )
-        self._swap_in(path, tmp_path, os.path.join(path, "edges"))
-        if meta is not None:
-            meta["edges_snapshot"] = True
-            _dump_json(meta, meta_path)
-
-    def has_edges(self, superstep: int) -> bool:
-        return os.path.isdir(os.path.join(self._step_dir(superstep), "edges"))
-
-    def read_edges(self, superstep: int) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._step_dir(superstep), "edges")
-        )

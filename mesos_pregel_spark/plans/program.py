@@ -52,7 +52,7 @@ from pyspark.storagelevel import StorageLevel
 from mesos_pregel_spark.operators.combine import combine
 from mesos_pregel_spark.operators.scatter import scatter
 from mesos_pregel_spark.plans.pregel import PregelRun
-from mesos_pregel_spark.plans.truncate import release_plan, truncate_plan
+from mesos_pregel_spark.plans.truncate import release_plan
 
 
 @dataclass
@@ -97,23 +97,6 @@ class VertexProgram:
     finalize: Callable[[DataFrame], DataFrame] | None = None
     # Rebuild ctx constants when resuming from a checkpoint.
     restore_ctx: Callable[[DataFrame, dict], None] | None = None
-    # Topology mutation [P §3.4]: called after each superstep's apply
-    # with (edges, new state, ctx); returns the edge table for the NEXT
-    # superstep (or None = unchanged).  Pregel exposes per-vertex
-    # mutation requests with handler-based conflict resolution; the
-    # DataFrame-native translation is one declarative transform over
-    # the whole edge table — additions are unions, removals are
-    # (anti-)joins, and conflict resolution is whatever the transform
-    # says, applied at the same point in the superstep cycle (between
-    # supersteps, after apply).  The loop repartitions/persists the new
-    # table and refreshes ctx["n_edges"].  Mutation makes topology part
-    # of the run's state, so checkpoints of mutation runs include an
-    # edge SNAPSHOT (post-mutation, zstd parquet) beside the vertex
-    # state, and resume replays against the snapshot — a checkpoint
-    # lacking one (pre-topology-checkpointing layout) is rejected.
-    mutate_edges: (
-        Callable[[DataFrame, DataFrame, dict], DataFrame | None] | None
-    ) = None
     # Bounded-iteration programs (sync-LPA) treat hitting the superstep
     # cap as normal completion, not interruption.
     converged_at_cap: bool = False
@@ -192,30 +175,7 @@ def _pregel_loop(
 ) -> tuple[DataFrame, PregelRun]:
 
     nparts = edge_partitions or spark.sparkContext.defaultParallelism
-    owned_edges = edge_partitions != 0  # we persisted it, we unpersist it
-    if resumed is not None and program.mutate_edges is not None:
-        # Topology is part of a mutation run's state: resume from the
-        # checkpoint's edge SNAPSHOT (written post-mutation each
-        # checkpointed superstep), never the caller's original edges.
-        ck_step = run.superstep - 1
-        if run.ckpt is None or not run.ckpt.has_edges(ck_step):
-            raise ValueError(
-                f"resuming a mutate_edges run requires the edge snapshot "
-                f"for superstep {ck_step}, which this checkpoint does not "
-                f"contain (written by engine versions with topology "
-                f"checkpointing; re-run from scratch)"
-            )
-        # snapshot is already semantically prepared — skip prep_edges
-        e = (
-            run.ckpt.read_edges(ck_step)
-            .select(*program.edge_cols)
-            .repartition(nparts, "src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n_edges = e.count()
-        owned_edges = True
-        run._edges_live = e
-    elif edge_partitions == 0:
+    if edge_partitions == 0:
         # Pre-partitioned fast path: the caller took over edge prep.
         # Round-2 prep became SEMANTIC (symmetrize for cc/lpa/kcore,
         # distinct/weight collapse for pagerank), so the handover is
@@ -292,37 +252,12 @@ def _pregel_loop(
             converged = True
             break
 
-        if program.mutate_edges is not None:
-            new_e = program.mutate_edges(e, state, ctx)
-            if new_e is not None:
-                # materialize the mutated table (eager truncation, so
-                # it no longer reads the state or the old table) BEFORE
-                # dropping the old one.  A persisted plan would still
-                # reference them, and releasing the old table would make
-                # Spark rebuild the new cache later, after reap() has
-                # freed the state it reads.
-                new_e = truncate_plan(new_e.repartition(nparts, "src"))
-                n_edges = new_e.count()
-                if owned_edges:
-                    release_plan(e)
-                e, owned_edges = new_e, True
-                run._edges_live = e
-                ctx["n_edges"] = n_edges
-                run.metrics[-1]["edges_after_mutation"] = n_edges
-            # Topology checkpointing: if this superstep's vertex state
-            # was durably checkpointed, snapshot the POST-mutation edge
-            # table beside it — the table the next superstep's scatter
-            # reads, hence what a resume must replay against.
-            last = run.superstep - 1
-            if run.ckpt is not None and last % run.checkpoint_every == 0:
-                run.ckpt.write_edges(e, last)
-
     result = run.finish(
         program.finalize(state) if program.finalize else state,
         converged=converged or program.converged_at_cap,
     )
-    if owned_edges:
-        release_plan(e)
+    # the edge table this loop persisted (None on the caller-owned path)
+    release_plan(run._edges_live)
     run._edges_live = None
     return result, run
 

@@ -1,6 +1,10 @@
 """k-core peeling: engine vs python oracle (exact) + closed forms,
 including a multi-round cascade."""
 
+import os
+import re
+import shutil
+
 import pytest
 
 from tests.conftest import id_space
@@ -79,6 +83,41 @@ def test_capped_run_equals_unrolled_prefix(spark):
     got_map = {r["id"]: r["in_core"] for r in got.collect()}
     # after exactly one sweep only vertex 5 (degree 1) is out
     assert got_map == {1: True, 2: True, 3: True, 4: True, 5: False}
+
+
+def _crash_after(ck_dir, last_kept_step):
+    """Simulate a crash: drop every checkpoint superstep dir (including
+    the final one) newer than ``last_kept_step``."""
+    for name in os.listdir(ck_dir):
+        m = re.match(r"^superstep=(\d{6})$", name)
+        if m and int(m.group(1)) > last_kept_step:
+            shutil.rmtree(os.path.join(ck_dir, name))
+
+
+def test_checkpoint_resume_equals_straight(spark, tmp_path):
+    """k-core is converged_at_cap: interrupt it mid-peel (crash-
+    simulated by deleting the newer checkpoints), resume, and the final
+    membership equals the straight-through run."""
+    # chain 1..6 peels over several rounds; K4 on 7..10 survives k=2
+    rows = [(i, i + 1, 1.0) for i in range(1, 6)] + [(6, 7, 1.0)] + [
+        (7, 8, 1.0), (8, 9, 1.0), (9, 10, 1.0), (7, 9, 1.0), (8, 10, 1.0),
+        (7, 10, 1.0),
+    ]
+    straight, _ = k_core(spark, _df(spark, rows), k=2)
+    ck = str(tmp_path / "kc")
+    _full, run1 = k_core(
+        spark, _df(spark, rows), k=2, checkpoint_dir=ck, checkpoint_every=1,
+    )
+    assert len(run1.metrics) >= 3  # a real multi-round cascade
+    _crash_after(ck, 1)
+    resumed, run2 = k_core(
+        spark, _df(spark, rows), k=2, checkpoint_dir=ck, checkpoint_every=1,
+    )
+    assert run2.metrics[0]["superstep"] >= 2  # actually resumed
+    assert (
+        {r["id"]: r["in_core"] for r in resumed.collect()}
+        == {r["id"]: r["in_core"] for r in straight.collect()}
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -152,3 +152,21 @@ def test_ktruss_zipf_hub_small_id(spark):
     df = _df(spark, rows)
     _compare(spark, df, rows, 3)
     _compare_trussness(spark, df, rows)
+
+
+@pytest.mark.parametrize("algo", [k_truss, trussness], ids=["k_truss", "trussness"])
+def test_releases_round_checkpoints(spark, algo):
+    """Once the result is collected, only the result's own checkpoint
+    is still persisted: no per-round support or removal checkpoint, no
+    canonical edge checkpoint and no degree cache."""
+    clique = [(a, b) for a in "pqrst" for b in "pqrst" if a < b]
+    tail = [("t", "u"), ("u", "v"), ("v", "w"), ("w", "x")]
+    df = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in clique + tail],
+        "src string, dst string, weight double",
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    out, _run = algo(spark, df)
+    out.collect()
+    assert jsc.getPersistentRDDs().size() <= before + 1
